@@ -459,31 +459,87 @@ def betweenness_sampled(
     pagerank, the reduction order is engine-internal → rows-only
     oracle; the python-reference property test pins values).
     """
-    from pyspark.sql.window import Window  # noqa: F401  (parity with siblings)
+    adj = _undirected_adjacency(edges)
+    visited = _brandes_forward(adj, sources.select(F.col("source").alias("s")), max_depth)
+    dmax = visited.agg(F.max("dist")).collect()[0][0] or 0
+    return _brandes_backward(adj, visited, dmax)
 
-    e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=True)
 
+def betweenness_exact_tree(edges: DataFrame, *, max_depth: int = 8) -> DataFrame:
+    """EXACT Brandes betweenness for unique-shortest-path graphs
+    (forests/hierarchies): when every σ_st = 1 the dependency recursion
+    δ_s(v) = Σ_{w ∈ succ(v)} (1 + δ_s(w)) yields integers, so the
+    result is engine-exact and hash-checkable against a SQL oracle —
+    the integer-δ counterpart of :func:`betweenness_sampled` (whose
+    float σ-ratio accumulation keeps it rows-only). Raises
+    ``ValueError`` if any σ > 1 (the graph has parallel shortest paths;
+    use the sampled estimator there).
+
+    Returns (node_id, bc BIGINT) over ALL sources: bc(v) = # ordered
+    (s, t) pairs, s ≠ v ≠ t, whose unique shortest path has v strictly
+    interior (halve for the undirected convention). All-pairs is
+    inherently quadratic in reach — at cluster scale you run the same
+    batched-multi-source machinery on a source sample; every BFS level
+    and every δ level is ONE join shuffled on the node key regardless
+    of |S|.
+    """
+    adj = _undirected_adjacency(edges)
+    sources = adj.select(F.col("u").alias("s")).distinct()
+    # one probe level past max_depth: EXACT means every (s, t) pair is
+    # reached, so an unconverged BFS (frontier still expanding after the
+    # last permitted level) must fail loudly instead of silently
+    # undercounting bc — the sigma>1 guard below cannot see truncation.
+    visited = _brandes_forward(adj, sources, max_depth + 1)
+    dmax, max_sigma = visited.agg(F.max("dist"), F.max("sigma")).collect()[0]
+    if (dmax or 0) > max_depth:
+        raise ValueError(
+            "betweenness_exact_tree: BFS still expanding past "
+            f"max_depth={max_depth}; the graph's diameter exceeds the "
+            "bound and the exact dependency sums would be truncated — "
+            "raise max_depth (or use betweenness_sampled)"
+        )
+    if (max_sigma or 1) > 1:
+        raise ValueError(
+            "betweenness_exact_tree: graph has parallel shortest paths "
+            f"(max sigma = {max_sigma}); exact integer deltas need unique "
+            "paths — use betweenness_sampled"
+        )
+    # every σ is 1, so each σ ratio is exactly 1.0 and every δ and bc
+    # partial sum is an integer below 2^53: the double sums are exact
+    return _brandes_backward(adj, visited, dmax or 0).select(
+        "node_id", F.col("bc").cast("long").alias("bc")
+    )
+
+
+def _undirected_adjacency(edges: DataFrame) -> DataFrame:
+    """(u, v) both ways for the non-loop pairs (a, b), UNION semantics:
+    an input holding both (a, b) and (b, a) is one undirected edge."""
+    e = edges.select("a", "b").filter(F.col("a") != F.col("b"))
+    return (
+        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
+        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _brandes_forward(adj: DataFrame, sources: DataFrame, levels: int) -> DataFrame:
+    """Level-synchronous BFS from every source ``s`` at once, up to
+    ``levels`` hops: (s, v, dist, sigma) with sigma = number of shortest
+    s→v paths."""
     frontier = sources.select(
-        F.col("source").alias("s"),
-        F.col("source").alias("v"),
+        "s",
+        F.col("s").alias("v"),
         F.lit(0).alias("dist"),
         F.lit(1).cast("long").alias("sigma"),
     ).localCheckpoint(eager=True)
     visited = frontier
-    for d in range(1, max_depth + 1):
+    for d in range(1, levels + 1):
         nxt = (
             frontier.join(adj, frontier["v"] == adj["u"])
             .groupBy("s", adj["v"].alias("w"))
             .agg(F.sum("sigma").alias("sigma"))
-            .select(
-                "s",
-                F.col("w").alias("v"),
-                F.lit(d).alias("dist"),
-                "sigma",
-            )
+            .select("s", F.col("w").alias("v"), F.lit(d).alias("dist"), "sigma")
             .join(visited.select("s", "v"), ["s", "v"], "left_anti")
             .localCheckpoint(eager=True)
         )
@@ -491,7 +547,12 @@ def betweenness_sampled(
             break
         visited = visited.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt
+    return visited
 
+
+def _brandes_backward(adj: DataFrame, visited: DataFrame, dmax: int) -> DataFrame:
+    """Dependency accumulation over the shortest-path DAG of ``visited``,
+    deepest level first; returns (node_id, bc) summed over sources."""
     # predecessor pairs on the shortest-path DAG: u at dist d, w at d+1
     vu = visited.select(
         F.col("s"), F.col("v").alias("u"), F.col("dist").alias("du"),
@@ -508,8 +569,6 @@ def betweenness_sampled(
         .select(vu["s"], "u", "du", "sig_u", "w", "dw", "sig_w")
         .localCheckpoint(eager=True)
     )
-    dmax = visited.agg(F.max("dist")).collect()[0][0] or 0
-    # delta accumulates level by level, deepest first
     delta = visited.select("s", "v", F.lit(0.0).alias("delta"))
     for d in range(dmax - 1, -1, -1):
         contrib = (
@@ -543,109 +602,6 @@ def betweenness_sampled(
         delta.filter(F.col("s") != F.col("v"))
         .groupBy(F.col("v").alias("node_id"))
         .agg(F.sum("delta").alias("bc"))
-    )
-
-
-def betweenness_exact_tree(edges: DataFrame, *, max_depth: int = 8) -> DataFrame:
-    """EXACT Brandes betweenness for unique-shortest-path graphs
-    (forests/hierarchies): when every σ_st = 1 the dependency recursion
-    δ_s(v) = Σ_{w ∈ succ(v)} (1 + δ_s(w)) stays in BIGINTs, so the
-    result is engine-exact and hash-checkable against a SQL oracle —
-    the integer-δ counterpart of :func:`betweenness_sampled` (whose
-    float σ-ratio accumulation keeps it rows-only). Raises
-    ``ValueError`` if any σ > 1 (the graph has parallel shortest paths;
-    use the sampled estimator there).
-
-    Returns (node_id, bc BIGINT) over ALL sources: bc(v) = # ordered
-    (s, t) pairs, s ≠ v ≠ t, whose unique shortest path has v strictly
-    interior (halve for the undirected convention). All-pairs is
-    inherently quadratic in reach — at cluster scale you run the same
-    batched-multi-source machinery on a source sample; every BFS level
-    and every δ level is ONE join shuffled on the node key regardless
-    of |S|.
-    """
-    e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    adj = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint(eager=True)
-    )
-    sources = adj.select(F.col("u").alias("s")).distinct()
-    frontier = sources.select(
-        "s",
-        F.col("s").alias("v"),
-        F.lit(0).alias("dist"),
-        F.lit(1).cast("long").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    visited = frontier
-    # one probe level past max_depth: EXACT means every (s, t) pair is
-    # reached, so an unconverged BFS (frontier still expanding after the
-    # last permitted level) must fail loudly instead of silently
-    # undercounting bc — the sigma>1 guard below cannot see truncation.
-    for d in range(1, max_depth + 2):
-        nxt = (
-            frontier.join(adj, frontier["v"] == adj["u"])
-            .groupBy("s", adj["v"].alias("w"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .select("s", F.col("w").alias("v"), F.lit(d).alias("dist"), "sigma")
-            .join(visited.select("s", "v"), ["s", "v"], "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        if d > max_depth:
-            raise ValueError(
-                "betweenness_exact_tree: BFS still expanding past "
-                f"max_depth={max_depth}; the graph's diameter exceeds the "
-                "bound and the exact dependency sums would be truncated — "
-                "raise max_depth (or use betweenness_sampled)"
-            )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    max_sigma = visited.agg(F.max("sigma")).collect()[0][0] or 1
-    if max_sigma > 1:
-        raise ValueError(
-            "betweenness_exact_tree: graph has parallel shortest paths "
-            f"(max sigma = {max_sigma}); exact integer deltas need unique "
-            "paths — use betweenness_sampled"
-        )
-    vu = visited.select(
-        "s", F.col("v").alias("u"), F.col("dist").alias("du")
-    )
-    vw = visited.select(
-        "s", F.col("v").alias("w"), F.col("dist").alias("dw")
-    )
-    dag = (
-        vu.join(adj, "u")
-        .join(vw, (F.col("v") == F.col("w")) & (vu["s"] == vw["s"]))
-        .filter(F.col("dw") == F.col("du") + 1)
-        .select(vu["s"], "u", "du", "w")
-        .localCheckpoint(eager=True)
-    )
-    dmax = visited.agg(F.max("dist")).collect()[0][0] or 0
-    delta = visited.select("s", "v", F.lit(0).cast("long").alias("delta"))
-    for d in range(dmax - 1, -1, -1):
-        contrib = (
-            dag.filter(F.col("du") == d)
-            .join(delta.select("s", F.col("v").alias("w"), "delta"), ["s", "w"])
-            .groupBy("s", F.col("u").alias("v"))
-            .agg(F.sum(F.lit(1) + F.col("delta")).alias("inc"))
-        )
-        delta = (
-            delta.join(contrib, ["s", "v"], "left")
-            .select(
-                "s",
-                "v",
-                (F.col("delta") + F.coalesce(F.col("inc"), F.lit(0)))
-                .cast("long")
-                .alias("delta"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return (
-        delta.filter(F.col("s") != F.col("v"))
-        .groupBy(F.col("v").alias("node_id"))
-        .agg(F.sum("delta").cast("long").alias("bc"))
     )
 
 
@@ -945,12 +901,7 @@ def label_propagation(edges: DataFrame, *, rounds: int = 3) -> DataFrame:
     `ha/.../ClusterManager` member lists); on the analytics side LPA
     is the cheap community baseline beside Louvain.
     """
-    e = edges.select("a", "b").filter(F.col("a") != F.col("b")).distinct()
-    adj = (
-        e.select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .unionByName(e.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        .localCheckpoint(eager=True)
-    )
+    adj = _undirected_adjacency(edges)
     labels = adj.select(F.col("u").alias("node_id")).distinct().select(
         "node_id", F.col("node_id").alias("label")
     )

@@ -51,11 +51,6 @@ def upsert_properties(props: DataFrame, updates: DataFrame) -> DataFrame:
     return merged.select(*key, *[pick(c).alias(c) for c in cols])
 
 
-def remove_properties(props: DataFrame, removals: DataFrame) -> DataFrame:
-    """P2 removeProperty: anti-join on the property key triple."""
-    return props.join(removals, ["owner_kind", "owner_id", "key_id"], "left_anti")
-
-
 # --- snapshot lineage (BranchedDataPolicy analog) -----------------------
 
 _VERSION_RE = re.compile(r"^v(\d+)$")

@@ -897,7 +897,6 @@ def shortest_path_match(
         k=hi,
         direction=direction,
         types=[t.strip() for t in type_name.split("|")] if type_name else None,
-        cache_edges=hi > 1,
     ).filter(F.col("hops") >= lo)
     out = reach.select(
         F.col("seed").alias(a_var),

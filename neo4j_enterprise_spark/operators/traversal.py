@@ -39,22 +39,30 @@ def bfs_reachable(
     k: int,
     direction: str = "out",
     types: Iterable[str] | None = None,
-    cache_edges: bool = True,
+    prune=None,
+    emit=None,
+    nodes: DataFrame | None = None,
 ) -> DataFrame:
-    """T2: nodes reachable from each seed within ≤ k hops.
+    """T2/X1: nodes reachable from each seed within ≤ k hops — the legacy
+    ``Traverser`` surface, ``traverse(BFS, StopEvaluator,
+    ReturnableEvaluator, types...)`` (`LockableNode.java:178-201`).
 
     ``seeds``: one column ``seed``. Returns (seed, node_id, hops) with the
     minimal hop count ≤ k (seed itself at hops=0). Per-seed visited sets
     are kept distributed; dedup per round is a groupBy-min on
     (seed, node_id) — map-side combinable.
 
-    ``cache_edges`` persists the (filtered, projected) edge set once so
-    each hop re-reads memory instead of re-deriving/re-scanning the
-    relationship source — the standard iterative-join optimization.
+    ``prune``: Column predicate over ``nodes`` columns; nodes satisfying it
+    are returned but NOT expanded (StopEvaluator.stopAt). ``emit``: Column
+    predicate selecting which visited nodes are returned
+    (ReturnableEvaluator). ``nodes`` (keyed by ``id``) is needed only when
+    a predicate is given. Column predicates keep evaluation JVM-side;
+    arbitrary Python evaluators can be wrapped as pandas_udf booleans and
+    passed the same way (the UDF is evaluated once per frontier batch).
     """
+    if nodes is None and (prune is not None or emit is not None):
+        raise ValueError("bfs_reachable: prune/emit predicates need `nodes`")
     edges = _edges(rels, direction, types)
-    if cache_edges and k > 1:
-        edges = edges.persist()
     reached = seeds.select(
         F.col("seed").cast("long").alias("seed"),
         F.col("seed").cast("long").alias("node_id"),
@@ -62,8 +70,16 @@ def bfs_reachable(
     )
     frontier = reached
     for depth in range(1, k + 1):
+        if prune is not None:
+            expandable = (
+                frontier.join(nodes, frontier["node_id"] == nodes["id"])
+                .filter(~prune)
+                .select("seed", "node_id", "hops")
+            )
+        else:
+            expandable = frontier
         nxt = (
-            frontier.join(edges, frontier["node_id"] == edges["a"])
+            expandable.join(edges, expandable["node_id"] == edges["a"])
             .select("seed", F.col("b").alias("node_id"), F.lit(depth).alias("hops"))
             .join(reached.select("seed", "node_id"), ["seed", "node_id"], "left_anti")
             .groupBy("seed", "node_id")
@@ -84,68 +100,9 @@ def bfs_reachable(
         nxt = nxt.localCheckpoint(eager=True)
         reached = reached.unionByName(nxt)
         frontier = nxt
-    return reached
-
-
-def traverse(
-    nodes: DataFrame,
-    rels: DataFrame,
-    seeds: DataFrame,
-    k: int,
-    direction: str = "out",
-    types: Iterable[str] | None = None,
-    prune=None,
-    emit=None,
-    cache_edges: bool = True,
-) -> DataFrame:
-    """T2/X1: the legacy ``Traverser`` surface —
-    ``traverse(BFS, StopEvaluator, ReturnableEvaluator, types...)``
-    (`LockableNode.java:178-201`).
-
-    ``prune``: Column predicate over node columns; nodes satisfying it are
-    returned but NOT expanded (StopEvaluator.stopAt). ``emit``: Column
-    predicate selecting which visited nodes are returned
-    (ReturnableEvaluator). Column predicates keep evaluation JVM-side;
-    arbitrary Python evaluators can be wrapped as pandas_udf booleans and
-    passed the same way (the UDF is evaluated once per frontier batch).
-    """
-    edges = _edges(rels, direction, types)
-    if cache_edges and k > 1:
-        # pass cache_edges=False when ``rels`` is already persisted
-        # upstream: a second persist here is a per-invocation cache-entry
-        # leak (each call makes a new DataFrame → a new storage entry)
-        edges = edges.persist()
-    node_attrs = nodes
-    reached = seeds.select(
-        F.col("seed").cast("long").alias("seed"),
-        F.col("seed").cast("long").alias("node_id"),
-        F.lit(0).alias("hops"),
-    )
-    frontier = reached
-    for depth in range(1, k + 1):
-        if prune is not None:
-            expandable = (
-                frontier.join(node_attrs, frontier["node_id"] == node_attrs["id"])
-                .filter(~prune)
-                .select("seed", "node_id", "hops")
-            )
-        else:
-            expandable = frontier
-        nxt = (
-            expandable.join(edges, expandable["node_id"] == edges["a"])
-            .select("seed", F.col("b").alias("node_id"), F.lit(depth).alias("hops"))
-            .join(reached.select("seed", "node_id"), ["seed", "node_id"], "left_anti")
-            .groupBy("seed", "node_id")
-            .agg(F.min("hops").alias("hops"))
-        )
-        # same every-round cut as bfs_reachable (three consumers per
-        # frontier; see the receipt there)
-        nxt = nxt.localCheckpoint(eager=True)
-        reached = reached.unionByName(nxt)
-        frontier = nxt
     if emit is not None:
         reached = (
-            reached.join(node_attrs, reached["node_id"] == node_attrs["id"])
+            reached.join(nodes, reached["node_id"] == nodes["id"])
             .filter(emit)
             .select("seed", "node_id", "hops")
         )
@@ -158,7 +115,6 @@ def dfs_preorder(
     k: int,
     direction: str = "out",
     types: Iterable[str] | None = None,
-    cache_edges: bool = True,
 ) -> DataFrame:
     """T2 DFS order: per-seed preorder ranks of EVERY node reachable by a
     simple path of ≤ k hops, children expanded in ascending node-id
@@ -194,8 +150,6 @@ def dfs_preorder(
     Returns (seed, node_id, preorder) with preorder = 1-based rank.
     """
     edges = _edges(rels, direction, types)
-    if cache_edges and k > 1:
-        edges = edges.persist()
 
     def _enc(c) -> F.Column:
         return F.format_string("%016x", c)
@@ -332,6 +286,17 @@ def pagerank(
     update instead of ``.collect()``-ed, so no driver action runs between
     iterations (one job per checkpoint cadence, not per iteration).
     """
+    return _pagerank(rels, None, iterations, damping)
+
+
+def _pagerank(
+    rels: DataFrame, seeds: DataFrame | None, iterations: int, damping: float
+) -> DataFrame:
+    """The loop behind ``pagerank`` and ``personalized_pagerank``. Each
+    node carries a teleport weight ``w`` (Σw = 1), fixed before the loop:
+    1/N for plain PageRank, is_seed/n_seeds for the personalized form.
+    Teleport mass ((1-d)·N) and dangling mass both restart by ``w``:
+    rank = w·((1-d)·N + d·dangling) + d·in_contrib."""
     nodes = (
         rels.select(F.col("src").alias("node_id"))
         .unionByName(rels.select(F.col("dst").alias("node_id")))
@@ -339,6 +304,22 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
     n_total = nodes.count()
+    if seeds is None:
+        weighted = nodes.withColumn("w", F.lit(1.0 / n_total))
+    else:
+        seed_set = seeds.select(F.col("seed").cast("long").alias("node_id")).distinct()
+        n_seeds = seed_set.agg(F.count("*").alias("n_seeds"))
+        weighted = (
+            nodes.join(
+                seed_set.crossJoin(n_seeds).select(
+                    "node_id", (F.lit(1.0) / F.col("n_seeds")).alias("w")
+                ),
+                "node_id",
+                "left",
+            )
+            .select("node_id", F.coalesce(F.col("w"), F.lit(0.0)).alias("w"))
+            .localCheckpoint(eager=True)
+        )
     out_deg = rels.groupBy(F.col("src").alias("node_id")).agg(
         F.count("*").alias("out_degree")
     )
@@ -359,23 +340,24 @@ def pagerank(
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
         )
         ranks = (
-            nodes.join(contribs, "node_id", "left")
+            weighted.join(contribs, "node_id", "left")
             .crossJoin(F.broadcast(dangling_1row))
             .select(
                 "node_id",
                 (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
+                    F.col("w")
                     * (
-                        F.coalesce(F.col("in_contrib"), F.lit(0.0))
-                        + F.col("dangling_mass") / F.lit(float(n_total))
+                        F.lit((1.0 - damping) * float(n_total))
+                        + F.lit(damping) * F.col("dangling_mass")
                     )
+                    + F.lit(damping) * F.coalesce(F.col("in_contrib"), F.lit(0.0))
                 ).alias("rank"),
             )
         )
         if (i + 1) % CHECKPOINT_EVERY == 0:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
+
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
     """Batch analytics: per-node triangle count + local clustering
@@ -491,46 +473,6 @@ def weighted_shortest_paths(
         ).localCheckpoint(eager=True)
         frontier = improved
     return dist
-
-
-def label_propagation(rels: DataFrame, rounds: int = 2) -> DataFrame:
-    """Batch analytics: community detection via synchronous label
-    propagation (LPA). Every node starts labeled with its own id; each
-    round it adopts the most frequent label among its neighbors, ties
-    broken by the smallest label — fully deterministic, unlike classic
-    async LPA (an upgrade the oracle can check by unrolling rounds).
-
-    Returns (node_id, label). Per round: one shuffle to count
-    (node, neighbor-label) pairs and one window argmax per node; lineage
-    cut by localCheckpoint. Fixed-round (not fixpoint) so results are
-    reproducible across cluster sizes.
-    """
-    edges = (
-        rels.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(rels.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-    ).persist()
-    labels = (
-        edges.select(F.col("a").alias("node_id"))
-        .distinct()
-        .withColumn("label", F.col("node_id"))
-    ).localCheckpoint(eager=True)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("node_id").orderBy(F.desc("n"), F.asc("label"))
-    for i in range(rounds):
-        counts = (
-            edges.join(labels, edges["b"] == labels["node_id"])
-            .groupBy(F.col("a").alias("node_id"), "label")
-            .agg(F.count("*").alias("n"))
-        )
-        labels = (
-            counts.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .select("node_id", "label")
-        ).localCheckpoint(eager=True)
-    edges.unpersist()
-    return labels
 
 
 def k_core(rels: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
@@ -681,61 +623,10 @@ def personalized_pagerank(
     """Personalized PageRank: teleport returns to the SEED set instead
     of everywhere — ranks measure proximity to the seeds (the
     recommendation / related-entities primitive). Same closed-plan
-    iteration as ``pagerank`` (one shuffle per round, dangling mass and
-    teleport both broadcast 1-row aggregates, no driver action between
-    rounds); mass conserves at ~N.
+    iteration as ``pagerank`` (one shuffle per round, dangling mass a
+    broadcast 1-row aggregate, no driver action between rounds; dangling
+    mass also restarts at the seeds); mass conserves at ~N.
 
     ``seeds``: one column ``seed``. Returns (node_id, rank).
     """
-    nodes = (
-        rels.select(F.col("src").alias("node_id"))
-        .unionByName(rels.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_total = nodes.count()
-    seed_set = seeds.select(F.col("seed").cast("long").alias("node_id")).distinct()
-    n_seeds_1row = seed_set.agg(F.count("*").alias("n_seeds"))
-    is_seed = seed_set.withColumn("__is_seed", F.lit(1))
-    out_deg = rels.groupBy(F.col("src").alias("node_id")).agg(
-        F.count("*").alias("out_degree")
-    )
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for i in range(iterations):
-        contribs = (
-            ranks.join(out_deg, "node_id")
-            .join(rels, ranks["node_id"] == rels["src"])
-            .select(
-                F.col("dst").alias("node_id"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
-            .groupBy("node_id")
-            .agg(F.sum("contrib").alias("in_contrib"))
-        )
-        dangling_1row = (
-            ranks.join(out_deg, "node_id", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
-        )
-        # teleport mass (1-d per node, N total) concentrates on seeds;
-        # dangling mass also restarts at the seeds in personalized PR
-        ranks = (
-            nodes.join(contribs, "node_id", "left")
-            .join(F.broadcast(is_seed), "node_id", "left")
-            .crossJoin(F.broadcast(dangling_1row))
-            .crossJoin(F.broadcast(n_seeds_1row))
-            .select(
-                "node_id",
-                (
-                    F.coalesce(F.col("__is_seed"), F.lit(0))
-                    * (
-                        F.lit((1.0 - damping) * float(n_total))
-                        + F.lit(damping) * F.col("dangling_mass")
-                    )
-                    / F.col("n_seeds")
-                    + F.lit(damping) * F.coalesce(F.col("in_contrib"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % CHECKPOINT_EVERY == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
+    return _pagerank(rels, seeds, iterations, damping)

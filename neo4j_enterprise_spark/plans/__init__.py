@@ -212,6 +212,22 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     #    r13.md §5): prefix marginal as a window over the pair table,
     #    rows proven identical at two scales before the edit ----------
     "docs_bigram_counts",
+    # -- graph-algorithm merge re-earns: one BFS loop (bfs_reachable now
+    #    carries the traverse prune/emit predicates; no edge persist),
+    #    one label propagation (community.label_propagation), one Brandes
+    #    sweep behind the exact variant, and the txlog.replay
+    #    remove-then-set fix; every oracle-bearing query whose plan the
+    #    merge touches re-earns its green --------------------------------
+    "bfs_2hop_reach",
+    "bfs_shortest_hops",
+    "graph_harmonic_centrality",
+    "traverse_pruned_2hop",
+    "traverse_dfs_preorder",
+    "cypher_shortest_path",
+    "graph_label_propagation_derived",
+    "graph_betweenness_exact_small",
+    "txlog_replay_lww",
+    "txlog_as_of_read",
     # -- r13 b1 plan changes re-earn (OPTIMIZATION_r13.md §1) ----------
     "check_fixture_nodes",
     "check_fixture_relationships",
@@ -302,6 +318,51 @@ _DEEP_CHANGE_ACK: dict[str, str] = {
         "identical per family; corruption matrix green; oracle twins "
         "lead this window)"
     ),
+    "graph_betweenness_sampled": (
+        "rows-only query (no oracle); betweenness_sampled now shares its "
+        "forward sweep, DAG build and backward sweep with "
+        "betweenness_exact_tree, moved verbatim into helpers. The one "
+        "plan change is a distinct() on the undirected adjacency, which "
+        "is a no-op on this input (edges are canonical a < b pairs). "
+        "Evidence: the python-Brandes property test, the star test, and "
+        "the exact-equals-sampled tree test"
+    ),
+    "graph_personalized_pagerank": (
+        "rows-only query (no oracle); pagerank and personalized_pagerank "
+        "now run one loop with a per-node teleport weight fixed before "
+        "it (is_seed/n_seeds here) instead of joining is_seed and "
+        "n_seeds every iteration — the same formula, factored. Evidence: "
+        "the unchanged mass/concentration test and the new "
+        "pagerank-equals-all-seeds personalized test (1e-9)"
+    ),
+    "txlog_replay_roundtrip": (
+        "rows-only query (no oracle); replay now drops every base row of "
+        "a key that has any remove_prop in range (the remove-then-set "
+        "fix). synthesize_txlog emits no remove_prop ops, so this "
+        "query's rows are unchanged; the oracle-bearing replay queries "
+        "txlog_replay_lww and txlog_as_of_read lead this window"
+    ),
+    **{
+        name: (
+            "reaches pattern.shortest_path_match only through the "
+            "cypher_query dispatcher; the query has no shortestPath() "
+            "clause, so its plan is unchanged (cypher_shortest_path, "
+            "the one caller, leads this window)"
+        )
+        for name in (
+            "cypher_case_classify",
+            "cypher_collect_unwind",
+            "cypher_exists_inactive",
+            "cypher_rel_var_counts",
+            "cypher_set_tier",
+            "cypher_type_alternation",
+            "cypher_union_dedup",
+            "cypher_where_or",
+            "cypher_with_collect",
+            "cypher_with_having",
+            "cypher_with_topk_expand",
+        )
+    },
 }
 
 # r12 OPTIMIZATION note (kept for history): a ktruss_peel wedge-join

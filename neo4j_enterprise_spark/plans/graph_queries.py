@@ -261,7 +261,7 @@ def chain_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bfs_2hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     rels = derived_rels(spark, sf_dir)  # already memoized+persisted
     seeds = rels.filter(F.col("src") <= 20).select(F.col("src").alias("seed")).distinct()
-    reached = traversal.bfs_reachable(rels, seeds, k=2, direction="out", cache_edges=False)
+    reached = traversal.bfs_reachable(rels, seeds, k=2, direction="out")
     return (
         reached.groupBy("seed").agg(F.count("*").alias("n_reachable")).orderBy("seed")
     )
@@ -507,10 +507,9 @@ def traverse_pruned_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = nodes.filter(
         (F.col("id").between(1, 10)) & (F.col("kind") == "customer")
     ).select(F.col("id").alias("seed"))
-    return traversal.traverse(
-        nodes, rels, seeds, k=2, direction="out",
-        prune=(F.col("kind") == "nation"),
-        cache_edges=False,  # derived_rels is memoized+persisted already
+    return traversal.bfs_reachable(
+        rels, seeds, k=2, direction="out",
+        prune=(F.col("kind") == "nation"), nodes=nodes,
     ).orderBy("seed", "node_id")
 
 
@@ -763,7 +762,6 @@ def traverse_dfs_preorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     return traversal.dfs_preorder(
         rels, seeds, k=3, direction="out",
         types=["PLACED", "CONTAINS", "IN_NATION", "IN_REGION"],
-        cache_edges=False,  # derived_rels is memoized+persisted already
     ).orderBy("seed", "preorder")
 
 
@@ -954,7 +952,7 @@ def row_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     rels = derived_rels(spark, sf_dir)
     seeds = rels.filter(F.col("src") <= 20).select(F.col("src").alias("seed")).distinct()
-    return traversal.bfs_reachable(rels, seeds, k=2, direction="out", cache_edges=False)
+    return traversal.bfs_reachable(rels, seeds, k=2, direction="out")
 
 
 @register(
@@ -992,7 +990,7 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     rels = derived_rels(spark, sf_dir)
     seeds = rels.filter(F.col("src") <= 20).select(F.col("src").alias("seed")).distinct()
-    reached = traversal.bfs_reachable(rels, seeds, k=3, direction="out", cache_edges=False)
+    reached = traversal.bfs_reachable(rels, seeds, k=3, direction="out")
     return (
         reached.filter(F.col("hops") > 0)
         .groupBy("seed")
@@ -1037,7 +1035,8 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(customer/supplier -IN_NATION/SUPP_NATION-> nation -IN_REGION-> "
     "region, undirected): a forest, so every pair has a UNIQUE "
     "shortest path (sigma = 1, asserted) and Brandes' delta "
-    "accumulation stays in BIGINTs — the hash-checkable exact variant "
+    "accumulation stays integral (exact, cast to BIGINT) — the "
+    "hash-checkable exact variant "
     "beside the rows-only float-sigma sampled estimator. bc(v) = # "
     "ordered (s,t) pairs routed strictly through v; only nations and "
     "regions score > 0 (the broker nodes). The oracle derives the "
@@ -1633,15 +1632,17 @@ def cypher_string_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LPA) over the undirected derived graph; top-20 community sizes. "
     "Oracle unrolls both rounds as SQL CTEs — the 4th oracle-checked "
     "iterative algorithm (after BFS, Bellman-Ford, near-dup closure). "
-    "Per round: one count shuffle + one per-node window argmax. "
-    "Renamed from graph_label_propagation in r11: that name was "
-    "accidentally reused by the lineitem co-purchase LPA (which keeps "
-    "it); this derived-graph variant exercises "
-    "traversal.label_propagation, the other community.label_propagation.",
+    "Per round: one count shuffle + one argmax aggregation "
+    "(community.label_propagation, the same operator as the lineitem "
+    "co-purchase graph_label_propagation). Every derived relationship "
+    "runs one way between two node kinds, so the graph has no "
+    "self-loops and the operator's dropping them matches the oracle.",
 )
 def graph_label_propagation_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     rels = derived_rels(spark, sf_dir)
-    labels = traversal.label_propagation(rels, rounds=2)
+    labels = community.label_propagation(
+        rels.select(F.col("src").alias("a"), F.col("dst").alias("b")), rounds=2
+    )
     return (
         labels.groupBy(F.col("label").alias("community"))
         .agg(F.count("*").alias("n_nodes"))

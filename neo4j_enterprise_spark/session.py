@@ -19,7 +19,24 @@ import sys
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+# Ceiling of the derived driver heap: pre-touching gets nonlinearly slower
+# above it (see the -Xms note in get_spark).
+MAX_DRIVER_GIB = 16
+
+
+def driver_mem() -> str:
+    """The driver heap: ``$SPARK_GRAFT_DRIVER_MEM``, else half of the
+    host's ``MemAvailable`` in whole GiB, at most ``MAX_DRIVER_GIB``. The
+    heap is pre-touched, so the other half stays free for the Python
+    workers, the JVM's off-heap memory and the page cache."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    with open("/proc/meminfo") as f:
+        avail_kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    return f"{max(1, min(MAX_DRIVER_GIB, avail_kib // (2 * 1024 * 1024)))}g"
 
 
 def get_spark(
@@ -35,6 +52,7 @@ def get_spark(
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or cpus
+    heap = driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -92,17 +110,17 @@ def get_spark(
         # real cluster Xms=Xmx + AlwaysPreTouch on executors is the
         # standard production setting for exactly this reason.
         #
-        # Default heap dropped 48g -> 16g with the pretouch: zeroing
-        # runs ~1 GB/s in this guest and NONLINEARLY worse above ~16g
-        # (measured startup: 16g=23s, 24g=72s, 48g>180s), and the 48g
-        # figure was sized for headroom the fault-storm fix makes
-        # unnecessary (steady-state live set is ~2-6g; GC on pretouched
-        # pages is cheap). Big one-off runs (tools/b1_scale.py 10M) set
-        # SPARK_GRAFT_DRIVER_MEM=48g and pay the longer pretouch once.
+        # The default heap (driver_mem) is half the host's available
+        # memory, because a pre-touched heap larger than the free memory
+        # kills the JVM at start, and at most 16g: pre-touch zeroing gets
+        # NONLINEARLY slower above ~16g (measured start-up on a 48 GB VM
+        # guest: 16g=23s, 24g=72s, 48g>180s), and the steady-state live
+        # set is ~2-6g (GC on pretouched pages is cheap). Big one-off
+        # runs (tools/b1_scale.py 10M) set SPARK_GRAFT_DRIVER_MEM=48g and
+        # pay the longer pretouch once.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:+ExplicitGCInvokesConcurrent -XX:+AlwaysPreTouch -Xms"
-            + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+            "-XX:+ExplicitGCInvokesConcurrent -XX:+AlwaysPreTouch -Xms" + heap,
         )
         .config(
             "spark.executor.extraJavaOptions",
@@ -124,7 +142,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         # the 1g default aborts any multi-10M-row collect/toPandas (the
         # sf30 degree_by_type materialization is ~1.5 GiB of Arrow
         # batches) — size it to the analysis rig's driver heap. On a
@@ -142,13 +160,11 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # The r5 default heap change (48g -> 16g, justified above) silently
-    # affects any consumer sized against the old default — state the
-    # effective heap once so an OOM is attributable to it.
+    # The derived sizing depends on the host — state the effective values
+    # once so an OOM or a slow run is attributable to them.
     print(
-        "# spark-graft session: driver heap "
-        + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        + " (override with SPARK_GRAFT_DRIVER_MEM)",
+        f"# spark-graft session: {cpus} local cores, driver heap {heap} "
+        "(override with SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM)",
         file=sys.stderr,
     )
     return spark

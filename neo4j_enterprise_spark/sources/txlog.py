@@ -136,13 +136,15 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
         .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
     )
 
-    # property ops: last write per (owner, key) wins; remove drops the row
+    # property ops: a remove anywhere in the range drops every base row
+    # of its (owner, key) — the key may hold several — and a set that is
+    # the last write per (owner, key) then writes the key
     w_prop = Window.partitionBy("entity_kind", "entity_id", "args.key_id").orderBy(
         F.desc("tx_id")
     )
+    prop_log = log.filter(F.col("op").isin("set_prop", "remove_prop"))
     prop_ops = (
-        log.filter(F.col("op").isin("set_prop", "remove_prop"))
-        .withColumn("rk", F.row_number().over(w_prop))
+        prop_log.withColumn("rk", F.row_number().over(w_prop))
         .filter(F.col("rk") == 1)
     )
     set_props = prop_ops.filter(F.col("op") == "set_prop").select(
@@ -152,7 +154,7 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
         F.col("args.value_long").alias("value_long"),
         F.col("tx_id"),
     )
-    removals = prop_ops.filter(F.col("op") == "remove_prop").select(
+    removals = prop_log.filter(F.col("op") == "remove_prop").select(
         F.col("entity_id").alias("owner_id"),
         F.when(F.col("entity_kind") == "node", "node").otherwise("rel").alias("owner_kind"),
         F.col("args.key_id").cast("int").alias("key_id"),

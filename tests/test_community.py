@@ -585,6 +585,10 @@ def test_label_propagation_majority_and_ties(spark):
     got = {r.node_id: r.label for r in label_propagation(df, rounds=4).collect()}
     assert got[0] == got[1] == got[2]
     assert got[3] == got[4] == got[5]
+    # undirected UNION semantics: a reciprocal pair is one edge and a
+    # self-loop is no edge, so neither changes any label
+    noisy = spark.createDataFrame(edges + [(1, 0), (4, 4)], "a long, b long")
+    assert {r.node_id: r.label for r in label_propagation(noisy, rounds=4).collect()} == got
 
 
 def test_greedy_coloring_completeness_contract(spark):
@@ -602,6 +606,28 @@ def test_greedy_coloring_completeness_contract(spark):
     empty = spark.createDataFrame([], "a long, b long")
     out = greedy_coloring(empty)
     assert out.columns == ["node_id", "color"] and out.count() == 0
+
+
+def test_betweenness_exact_tree_equals_sampled_over_all_sources(spark):
+    from neo4j_enterprise_spark.operators.community import (
+        betweenness_exact_tree,
+        betweenness_sampled,
+    )
+
+    # two-level tree with a longer branch: 0-{1,2}, 1-{3,4}, 4-5
+    tree = spark.createDataFrame(
+        [(0, 1), (0, 2), (1, 3), (1, 4), (4, 5)], "a long, b long"
+    )
+    sources = spark.createDataFrame([(i,) for i in range(6)], "source long")
+    exact = dict(map(tuple, betweenness_exact_tree(tree).collect()))
+    sampled = {
+        r.node_id: r.bc
+        for r in betweenness_sampled(tree, sources, max_depth=8)
+        .selectExpr("node_id", "CAST(bc AS BIGINT) AS bc")
+        .collect()
+    }
+    assert exact == sampled
+    assert exact[1] > 0 and exact[3] == 0
 
 
 def test_betweenness_exact_tree_truncation_raises(spark):

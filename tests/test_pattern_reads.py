@@ -100,18 +100,21 @@ def test_traverse_prune_stops_expansion(spark):
     nodes, rels = _graph(spark)
     seeds = spark.createDataFrame([(0,)], "seed long")
     # prune node 1: it is returned but 2/3 are never reached
-    out = traversal.traverse(
-        nodes, rels, seeds, k=2, prune=(F.col("id") == 1)
+    out = traversal.bfs_reachable(
+        rels, seeds, k=2, prune=(F.col("id") == 1), nodes=nodes
     )
     got = {r["node_id"] for r in out.collect()}
     assert got == {0, 1, 6}
+    # a predicate needs the node store to evaluate against
+    with pytest.raises(ValueError, match="need `nodes`"):
+        traversal.bfs_reachable(rels, seeds, k=2, prune=(F.col("id") == 1))
 
 
 def test_traverse_emit_filters_output(spark):
     nodes, rels = _graph(spark)
     seeds = spark.createDataFrame([(0,)], "seed long")
-    out = traversal.traverse(
-        nodes, rels, seeds, k=2, emit=(F.col("id") % 2 == 0)
+    out = traversal.bfs_reachable(
+        rels, seeds, k=2, emit=(F.col("id") % 2 == 0), nodes=nodes
     )
     got = {r["node_id"] for r in out.collect()}
     assert got == {0, 2, 6}

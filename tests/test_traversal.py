@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from neo4j_enterprise_spark.operators import traversal
+from neo4j_enterprise_spark.operators.community import label_propagation
 
 
 def _edges_df(spark, pairs):
@@ -103,19 +104,19 @@ def test_label_propagation_two_triangles(spark):
     # smallest neighbor label; round 2 the majority settles it).
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12)],
-        "src long, dst long",
+        "a long, b long",
     )
-    out = {r["node_id"]: r["label"] for r in traversal.label_propagation(edges, rounds=2).collect()}
+    out = {r["node_id"]: r["label"] for r in label_propagation(edges, rounds=2).collect()}
     assert out == {0: 0, 1: 0, 2: 0, 10: 10, 11: 10, 12: 10}
 
 
 def test_label_propagation_is_deterministic(spark):
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (10, 12), (2, 10)],
-        "src long, dst long",
+        "a long, b long",
     )
-    a = sorted(map(tuple, traversal.label_propagation(edges, rounds=3).collect()))
-    b = sorted(map(tuple, traversal.label_propagation(edges, rounds=3).collect()))
+    a = sorted(map(tuple, label_propagation(edges, rounds=3).collect()))
+    b = sorted(map(tuple, label_propagation(edges, rounds=3).collect()))
     assert a == b
 
 
@@ -279,3 +280,19 @@ def test_personalized_pagerank_concentrates_near_seeds(spark):
     # plain pagerank spreads teleport everywhere instead
     pr = {r["node_id"]: r["rank"] for r in pagerank(rels, iterations=12).collect()}
     assert pr[10] > 0.1
+
+
+def test_pagerank_is_personalized_pagerank_seeded_everywhere(spark):
+    from neo4j_enterprise_spark.operators.traversal import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    # a hub, a cycle and a dangling node (3 has no out-edges)
+    rels = _edges_df(spark, [(1, 0), (2, 0), (3, 0), (0, 1), (1, 2), (0, 3)])
+    seeds = spark.createDataFrame([(i,) for i in range(4)], "seed long")
+    pr = dict(map(tuple, pagerank(rels, iterations=7).collect()))
+    ppr = dict(map(tuple, personalized_pagerank(rels, seeds, iterations=7).collect()))
+    assert pr.keys() == ppr.keys() == {0, 1, 2, 3}
+    for v in pr:
+        assert abs(pr[v] - ppr[v]) < 1e-9, (v, pr[v], ppr[v])

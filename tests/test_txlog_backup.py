@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import time
 
@@ -18,6 +19,7 @@ from neo4j_enterprise_spark.operators.mutation import (
 from neo4j_enterprise_spark.operators.record_checks import validate
 from neo4j_enterprise_spark.sources import snapshot as bk
 from neo4j_enterprise_spark.sources.txlog import (
+    TXLOG_SCHEMA,
     export_range,
     replay,
     synthesize_txlog,
@@ -67,6 +69,19 @@ def test_replay_applies_creates_deletes_and_props(spark):
     v = validate(out)
     chain_rules = v.filter(F.col("rule").contains("ReferenceBack"))
     assert chain_rules.count() == 0
+    # remove then set of a key node 0 holds twice (generate_graph writes
+    # two INT rows under key 1): applied in tx order, one row is left
+    key0 = "owner_kind = 'node' AND owner_id = 0 AND key_id = 1"
+    assert base.properties.filter(key0).count() == 2
+    remove_then_set = spark.createDataFrame(
+        [
+            (1, 0, 0, "remove_prop", "node", 0, json.dumps({"key_id": 1})),
+            (2, 0, 0, "set_prop", "node", 0, json.dumps({"key_id": 1, "value_long": 5})),
+        ],
+        TXLOG_SCHEMA,
+    )
+    rows = replay(base, remove_then_set).properties.filter(key0).collect()
+    assert [r["value_long"] for r in rows] == [5]
 
 
 def test_replay_is_idempotent_and_prefix_consistent(spark):
