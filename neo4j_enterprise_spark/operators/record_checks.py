@@ -543,8 +543,8 @@ def check_families(g: PropertyGraph) -> dict[str, DataFrame]:
 
 
 # family name -> builder; the single source of truth for the checker's
-# task list (check_families materializes it per graph; validate(eager)
-# defers each build into its pool thread so analysis overlaps execution)
+# task list (check_families materializes it per graph; validate defers
+# each build into its pool thread so analysis overlaps execution)
 _FAMILY_BUILDERS: dict[str, Callable[[PropertyGraph], DataFrame]] = {
     "nodes": check_nodes,
     "relationships": check_relationships,
@@ -578,7 +578,7 @@ def family_element_counts(g: PropertyGraph) -> dict[str, int]:
     }
 
 
-def validate(g: PropertyGraph, eager: bool = True) -> DataFrame:
+def validate(g: PropertyGraph) -> DataFrame:
     """FullCheck (`FullCheck.java:71-123`): the whole checker.
 
     The reference runs 9 sequential store scans with MULTI_THREADED /
@@ -586,35 +586,29 @@ def validate(g: PropertyGraph, eager: bool = True) -> DataFrame:
     family is one Catalyst plan and AQE sizes the shuffles — both knobs
     dissolve.
 
-    ``eager`` (default) materializes each family's violations via
-    ``localCheckpoint`` before unioning. This bounds plan size: the
-    all-in-one union (~35 branches sharing deep window subtrees) chokes
-    the optimizer at scale, while the per-family plans each run in
-    seconds — the same bounded-lineage principle the iterative operators
-    follow. Each family CONSTRUCTS AND materializes inside its own pool
-    thread (r13, guide §2.6 applied to the driver side too): building a
-    family frame is ~0.15 s of Catalyst analysis / py4j round-trips that
-    release the GIL, so serial construction added ~1.1 s of driver time
-    in FRONT of the concurrent jobs — decomposed construct/pool/count =
-    1.15/1.30/0.16 s, and moving construction into the threads took the
-    warm 100 k suite 2.37 → 1.64 s (interleaved medians,
-    OPTIMIZATION_r13.md §11). This is the reference's MULTI_THREADED
-    task-execution axis (`TaskExecutionOrder.java:29-110`, pool =
-    #cores) covering analysis as well as execution. ``eager=False``
-    keeps the fully-lazy single plan (fine for small fixtures, composes
-    with further transformations).
+    Each family's violations are materialized via ``localCheckpoint``
+    before unioning. This bounds plan size: the all-in-one union (~35
+    branches sharing deep window subtrees) chokes the optimizer at
+    scale, while the per-family plans each run in seconds — the same
+    bounded-lineage principle the iterative operators follow. Each
+    family CONSTRUCTS AND materializes inside its own pool thread:
+    building a family frame is ~0.15 s of Catalyst analysis / py4j
+    round-trips that release the GIL, so serial construction added
+    ~1.1 s of driver time in FRONT of the concurrent jobs — moving
+    construction into the threads took the warm 100 k suite
+    2.37 → 1.64 s (interleaved medians, OPTIMIZATION_r13.md §11). This
+    is the reference's MULTI_THREADED task-execution axis
+    (`TaskExecutionOrder.java:29-110`, pool = #cores) covering analysis
+    as well as execution.
     """
-    if eager:
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        builders = list(_FAMILY_BUILDERS.values())
-        with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-            families = list(
-                pool.map(
-                    lambda build: build(g).localCheckpoint(eager=True),
-                    builders,
-                )
+    builders = list(_FAMILY_BUILDERS.values())
+    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+        families = list(
+            pool.map(
+                lambda build: build(g).localCheckpoint(eager=True),
+                builders,
             )
-    else:
-        families = list(check_families(g).values())
+        )
     return reduce(DataFrame.unionByName, families)

@@ -8,6 +8,10 @@ Spark-native extension for training-data pipelines:
   from matching buckets (multi-probe over b bands). The 100 TB path:
   the bucket join replaces the cross product.
 
+Every approximate top-k operator is filter-and-refine: a candidate
+generator (LSH bucket, IVF cell probe ``_probe``, PQ/ADC scan) feeds the
+one exact re-rank, ``_rerank``.
+
 Determinism contract (for oracle comparison): embeddings are quantized
 to BIGINT (round(x·1000)) so every dot product / norm is an exact
 integer — float-summation order stops mattering, and Spark and DuckDB
@@ -145,37 +149,22 @@ def _np_quantize(mat: np.ndarray, scale: int = 1000) -> np.ndarray:
     ).astype(np.int64)
 
 
-def cosine_topk_bruteforce(
-    embeddings: DataFrame, seeds: DataFrame, k: int = 5
+def _matmul_topk(
+    embeddings: DataFrame, seeds: DataFrame, k: int, label: str | None = None
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each seed.
+    """The Arrow integer-matmul scorer behind ``cosine_topk_bruteforce``
+    and ``hard_negatives``: (seed, neighbor, score, rk ≤ k) over every
+    corpus vector, or — given ``label`` — only over vectors whose label
+    differs from the seed's.
 
-    ``embeddings``: (vec_id, embedding array<float>); ``seeds``: subset
-    with the same schema. Seeds are collected (planner-sized by
-    construction — same contract as the IVF/PQ codebook collects) and
-    closed over an Arrow ``mapInPandas`` scorer: each corpus batch is
-    one integer numpy matmul against the seed matrix — dense linear
-    algebra is where Arrow-batched numpy IS the vectorized path
-    (Catalyst's higher-order zip_with/aggregate functions run
-    interpreted, measured ~9x slower at sf1). Each batch emits only its
-    per-seed top-k under the total order (score desc, neighbor asc) —
-    a superset of the global top-k regardless of batch boundaries — so
-    the final window ranks ~batches*k*|seeds| rows, not |corpus|*|seeds|.
-
-    Determinism: quantized BIGINT dots and norms, one int->double cast
-    each, one multiply, one sqrt, one divide — bit-identical to the SQL
-    oracle's expression (same IEEE op sequence, numpy or JVM).
-
-    Quantization happens INSIDE the Arrow batch (``_np_quantize`` —
-    exact Spark/DuckDB ROUND half-away-from-zero, see its proof), not
-    as a Catalyst ``transform`` lambda on the corpus side: the
-    interpreted-HOF tax on |corpus|·dims elements measured 0.71 s of
-    this query's 1.2 s wall at sf1 (58%) — the numpy form is free
-    inside the batch the scorer already owns.
-    """
-    embeddings = drop_unsearchable(embeddings)
-    seeds = drop_unsearchable(seeds)
-    seed_rows = seeds.select(F.col("vec_id"), "embedding").collect()
+    Seeds are collected (planner-sized) and closed over a
+    ``mapInPandas`` scorer; each corpus batch is quantized with
+    ``_np_quantize`` and scored by one int64 matmul against the seed
+    matrix, and emits only its per-seed top-k under (score desc,
+    neighbor asc) — a superset of the global top-k regardless of batch
+    boundaries, so the final window ranks ~batches·k·|seeds| rows."""
+    extra = [label] if label else []
+    seed_rows = seeds.select("vec_id", "embedding", *extra).collect()
     # The scorer is dims-agnostic (media features are 8-dim, the
     # embeddings table 64), so the scoring dimensionality is inferred
     # from the seeds: modal length, ties to the smaller. Seeds and
@@ -194,6 +183,8 @@ def cosine_topk_bruteforce(
     )
     order = np.argsort(sid)
     sid, smat = sid[order], smat[order]
+    if label:
+        slab = np.array([r[label] for r in seed_rows], dtype=np.int64)[order]
     sn = (smat * smat).sum(axis=1)
 
     def score_batches(batches):
@@ -211,6 +202,8 @@ def cosine_topk_bruteforce(
             # candidacy outright — same rule on every engine.
             nz = cn > 0
             ids, cmat, cn = ids[nz], cmat[nz], cn[nz]
+            if label:
+                labs = pdf[label].to_numpy(np.int64)[nz]
             if ids.size == 0:
                 continue
             ip = cmat @ smat.T  # (batch, seeds) exact int64
@@ -222,6 +215,8 @@ def cosine_topk_bruteforce(
                 if sn[j] == 0:  # zero-norm seed: no defined neighbors
                     continue
                 mask = ids != sid[j]
+                if label:
+                    mask &= labs != slab[j]
                 idj, scj = ids[mask], score[mask, j]
                 if idj.size == 0:
                     continue
@@ -235,13 +230,106 @@ def cosine_topk_bruteforce(
                 yield pd.concat(out, ignore_index=True)
 
     scored = embeddings.select(
-        "vec_id", F.col("embedding").alias("emb")
+        "vec_id", F.col("embedding").alias("emb"), *extra
     ).mapInPandas(score_batches, "seed long, neighbor long, score double")
     w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= k)
         .select("seed", "neighbor", "score", "rk")
+    )
+
+
+def cosine_topk_bruteforce(
+    embeddings: DataFrame, seeds: DataFrame, k: int = 5
+) -> DataFrame:
+    """Exact top-k cosine neighbors for each seed.
+
+    ``embeddings``: (vec_id, embedding array<float>); ``seeds``: subset
+    with the same schema. Seeds are collected (planner-sized by
+    construction — same contract as the IVF/PQ codebook collects) and
+    closed over an Arrow ``mapInPandas`` scorer (``_matmul_topk``): each
+    corpus batch is one integer numpy matmul against the seed matrix —
+    dense linear algebra is where Arrow-batched numpy IS the vectorized
+    path (Catalyst's higher-order zip_with/aggregate functions run
+    interpreted, measured ~9x slower at sf1).
+
+    Determinism: quantized BIGINT dots and norms, one int->double cast
+    each, one multiply, one sqrt, one divide — bit-identical to the SQL
+    oracle's expression (same IEEE op sequence, numpy or JVM).
+
+    Quantization happens INSIDE the Arrow batch (``_np_quantize`` —
+    exact Spark/DuckDB ROUND half-away-from-zero, see its proof), not
+    as a Catalyst ``transform`` lambda on the corpus side: the
+    interpreted-HOF tax on |corpus|·dims elements measured 0.71 s of
+    this query's 1.2 s wall at sf1 (58%) — the numpy form is free
+    inside the batch the scorer already owns.
+    """
+    return _matmul_topk(drop_unsearchable(embeddings), drop_unsearchable(seeds), k)
+
+
+def _seed_vectors(seeds: DataFrame) -> DataFrame:
+    """(seed, qv, qn): quantized seed vectors and their squared norms."""
+    return seeds.select(
+        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
+    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
+
+
+def _rerank(
+    cand: DataFrame, seeds: DataFrame, embeddings: DataFrame, k: int
+) -> DataFrame:
+    """The refine stage every candidate generator ends in: exact
+    quantized cosine of each (seed, neighbor) candidate, then the top
+    ``k`` per seed by (score desc, neighbor asc) —
+    (seed, neighbor, score, rk).
+
+    Seeds are planner-sized and broadcast; the corpus side is joined on
+    the candidate ids only. Quantization stays on the per-vector sides,
+    before the candidate join (measured r12: per-candidate evaluation
+    regressed — a vector participates in many candidate pairs, so
+    per-vector quantize+norm is the cheaper side; see
+    embedding_near_dup_lsh)."""
+    c = embeddings.select(
+        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
+    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
+    scored = (
+        cand.join(F.broadcast(_seed_vectors(seeds)), "seed")
+        .join(c, "neighbor")
+        .select(
+            "seed",
+            "neighbor",
+            (
+                _dot(F.col("qv"), F.col("cv")).cast("double")
+                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
+            ).alias("score"),
+        )
+    )
+    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("seed", "neighbor", "score", "rk")
+    )
+
+
+def _probe(seeds: DataFrame, centroids: DataFrame, n_probe: int) -> DataFrame:
+    """IVF cell probe: (seed, cell_id) for each seed's ``n_probe`` cells
+    closest by cosine to its centroid, ties to the lower cell_id. Seeds
+    and the K centroids are both planner-sized, so the cross join is
+    broadcast on both sides."""
+    scores = F.broadcast(_seed_vectors(seeds)).join(F.broadcast(centroids)).select(
+        "seed",
+        "cell_id",
+        (
+            _dot_d(F.col("qv"), F.col("ccv"))
+            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
+        ).alias("cscore"),
+    )
+    w = Window.partitionBy("seed").orderBy(F.desc("cscore"), F.asc("cell_id"))
+    return (
+        scores.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= n_probe)
+        .select("seed", "cell_id")
     )
 
 
@@ -392,78 +480,34 @@ def ivf_ann_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    kmeans_iters: int = 0,
     centroids: DataFrame | None = None,
     dims: int = 64,
 ) -> DataFrame:
     """IVF probe: score each seed only against vectors in its ``n_probe``
     closest cells. Same output contract as the brute-force/LSH variants;
     recall grows with n_probe (n_probe = n_cells degenerates to exact).
-    ``kmeans_iters > 0`` refines the hash-sampled centroids with Lloyd
-    iterations first (``ivf_train_kmeans``) — tighter cells, better
-    recall at the same n_probe. An explicit ``centroids`` DataFrame
-    (cell_id, ccv, ccn) overrides selection entirely (e.g. the portable
-    ``ivf_fixed_centroids``, or offline-trained centroids).
+    An explicit ``centroids`` DataFrame (cell_id, ccv, ccn) overrides the
+    hash-sampled selection — e.g. the portable ``ivf_fixed_centroids``,
+    or Lloyd-refined ``ivf_train_kmeans`` centroids (tighter cells,
+    better recall at the same n_probe).
     """
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
-    if centroids is not None:
-        vecs = embeddings.select(
-            "vec_id", quantize(F.col("embedding")).alias("qv")
-        ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-        assignments = _assign_to_centroids(vecs, centroids)
-    elif kmeans_iters > 0:
-        centroids = ivf_train_kmeans(embeddings, n_cells, kmeans_iters, dims)
-        vecs = embeddings.select(
-            "vec_id", quantize(F.col("embedding")).alias("qv")
-        ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-        assignments = _assign_to_centroids(vecs, centroids)
-    else:
+    if centroids is None:
         centroids, assignments = ivf_assign(embeddings, n_cells, dims)
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    probe_scores = F.broadcast(q).join(F.broadcast(centroids)).select(
-        "seed",
-        "cell_id",
-        (
-            _dot_d(F.col("qv"), F.col("ccv"))
-            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
-        ).alias("cscore"),
-    )
-    w_probe = Window.partitionBy("seed").orderBy(F.desc("cscore"), F.asc("cell_id"))
-    probes = (
-        probe_scores.withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= n_probe)
-        .select("seed", "cell_id")
-    )
+    else:
+        vecs = embeddings.select(
+            "vec_id", quantize(F.col("embedding")).alias("qv")
+        ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
+        assignments = _assign_to_centroids(vecs, centroids)
     cand = (
-        probes.join(assignments, "cell_id")
+        _probe(seeds, centroids, n_probe)
+        .join(assignments, "cell_id")
         .filter(F.col("vec_id") != F.col("seed"))
         .select("seed", F.col("vec_id").alias("neighbor"))
         .distinct()
     )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    scored = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def _plane_signs(plane: int, dims: int, seed: int) -> list[int]:
@@ -592,34 +636,7 @@ def lsh_ann_topk(
         .select("seed", F.col("vec_id").alias("neighbor"))
         .distinct()
     )
-    # Quantization stays on the per-vector corpus side, before the
-    # candidate join (measured r12: per-candidate evaluation regressed —
-    # a vector participates in many candidate pairs, so per-vector
-    # quantize+norm is the cheaper side; see embedding_near_dup_lsh).
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    scored = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def embedding_near_dup(
@@ -846,6 +863,20 @@ def pq_encode(
     )
 
 
+def _codebook_arrays(
+    codebook: DataFrame, m: int, codes_k: int, dims: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """The trained codebook as numpy arrays for the ADC scans:
+    CB[sub, code] (the centroid subvector) and CN[sub, code] (its
+    squared norm). Collecting is a planner step on m·codes_k rows."""
+    CB = np.zeros((m, codes_k, dims // m))
+    CN = np.zeros((m, codes_k))
+    for r in codebook.collect():
+        CB[r["sub_id"], r["code"]] = r["cv"]
+        CN[r["sub_id"], r["code"]] = r["cnorm"]
+    return CB, CN
+
+
 def pq_ann_topk(
     embeddings: DataFrame,
     seeds: DataFrame,
@@ -870,27 +901,19 @@ def pq_ann_topk(
     step on m·codes_k + |seeds| rows (same convention as
     ``sink.write_dataset``), never data-sized.
     """
-    import numpy as np
-
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
     codebook = pq_train(embeddings, m=m, codes_k=codes_k, dims=dims, iters=iters)
     codes = pq_encode(embeddings, codebook, m=m, dims=dims)
 
-    cb_rows = codebook.collect()  # m*codes_k rows — planner-sized
-    d = dims // m
-    CB = np.zeros((m, codes_k, d))
-    CN = np.zeros((m, codes_k))
-    for r in cb_rows:
-        CB[r["sub_id"], r["code"]] = r["cv"]
-        CN[r["sub_id"], r["code"]] = r["cnorm"]
+    CB, CN = _codebook_arrays(codebook, m, codes_k, dims)
     seed_rows = (
         seeds.select("vec_id", quantize(F.col("embedding")).alias("qv")).collect()
     )
     S = np.array([r["qv"] for r in seed_rows], dtype=np.float64)
     seed_ids = np.array([r["vec_id"] for r in seed_rows])
     # LUT[s, j, c] = <seed_s sub_j, CB[j, c]>
-    LUT = np.einsum("sjd,jcd->sjc", S.reshape(len(S), m, d), CB)
+    LUT = np.einsum("sjd,jcd->sjc", S.reshape(len(S), m, dims // m), CB)
     seed_norm = (S * S).sum(axis=1)
     n_keep = refine * k
 
@@ -922,31 +945,7 @@ def pq_ann_topk(
     cand = cand.withColumn("rk", F.row_number().over(wa)).filter(
         F.col("rk") <= n_keep
     ).select("seed", "neighbor")
-    # exact re-rank of candidates only (asymmetric refinement)
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    exact = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def ivf_pq_ann_topk(
@@ -974,8 +973,6 @@ def ivf_pq_ann_topk(
     makes billion-scale ANN feasible (residual encoding is the standard
     production refinement on top of this flow).
     """
-    import numpy as np
-
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
     centroids, assignments = ivf_assign(embeddings, n_cells, dims)
@@ -984,41 +981,14 @@ def ivf_pq_ann_topk(
         assignments, "vec_id"
     )
 
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    probe_scores = F.broadcast(q).join(F.broadcast(centroids)).select(
-        "seed",
-        "cell_id",
-        (
-            _dot_d(F.col("qv"), F.col("ccv"))
-            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
-        ).alias("cscore"),
-    )
-    w_probe = Window.partitionBy("seed").orderBy(F.desc("cscore"), F.asc("cell_id"))
-    probes = (
-        probe_scores.withColumn("rk", F.row_number().over(w_probe))
-        .filter(F.col("rk") <= n_probe)
-        .select("seed", "cell_id")
-    )
-
-    cb_rows = codebook.collect()  # m*codes_k rows — planner-sized
-    d = dims // m
-    CB = np.zeros((m, codes_k, d))
-    CN = np.zeros((m, codes_k))
-    for r in cb_rows:
-        CB[r["sub_id"], r["code"]] = r["cv"]
-        CN[r["sub_id"], r["code"]] = r["cnorm"]
-    seed_rows = q.collect()
+    CB, CN = _codebook_arrays(codebook, m, codes_k, dims)
     LUTS = {}
     NORMS = {}
-    for r in seed_rows:
+    for r in _seed_vectors(seeds).collect():
         sv = np.array(r["qv"], dtype=np.float64)
-        LUTS[r["seed"]] = np.einsum("jd,jcd->jc", sv.reshape(m, d), CB)
+        LUTS[r["seed"]] = np.einsum("jd,jcd->jc", sv.reshape(m, dims // m), CB)
         NORMS[r["seed"]] = float(r["qn"])
     n_keep = refine * k
-
-    import pandas as pd
 
     def scan(key, pdf):
         seed = key[0]
@@ -1032,33 +1002,17 @@ def ivf_pq_ann_topk(
             {"seed": seed, "neighbor": pdf["vec_id"].to_numpy()[top]}
         )
 
-    scan_input = probes.join(codes, "cell_id").select("seed", "vec_id", "codes")
+    scan_input = (
+        _probe(seeds, centroids, n_probe)
+        .join(codes, "cell_id")
+        .select("seed", "vec_id", "codes")
+    )
     cand = (
         scan_input.groupBy("seed")
         .applyInPandas(scan, "seed long, neighbor long")
         .filter(F.col("seed") != F.col("neighbor"))
     )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"), quantize(F.col("embedding")).alias("cv")
-    ).withColumn("cn", _dot(F.col("cv"), F.col("cv")))
-    exact = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
-    )
+    return _rerank(cand, seeds, embeddings, k)
 
 
 def label_centroids(embeddings: DataFrame, label_col: str = "label") -> DataFrame:
@@ -1158,12 +1112,10 @@ def hard_negatives(
     plus a label mask per seed.
 
     ``embeddings``/``seeds``: (vec_id, embedding array<float>,
-    label int). Seeds are planner-sized and collected; per-batch
-    top-k emission keeps the final window input at
-    ~batches·k·|seeds| rows. Same determinism contract: quantized
-    BIGINT dots, one multiply + sqrt + divide per score. At 100 TB
-    the brute-force scan swaps for the LSH/IVF candidate paths with
-    the identical mask-and-rank tail.
+    label int). Returns (seed, negative, score, rk). Same determinism
+    contract: quantized BIGINT dots, one multiply + sqrt + divide per
+    score. At 100 TB the brute-force scan swaps for the LSH/IVF
+    candidate paths with the identical mask-and-rank tail.
     """
     # NULL labels can never satisfy the different-label predicate (SQL
     # `clabel <> slabel` is NULL-unknown on either side), and a None in
@@ -1171,72 +1123,8 @@ def hard_negatives(
     # JVM-side; the oracle's <> drops the same rows without a filter.
     embeddings = drop_unsearchable(embeddings).filter(F.col("label").isNotNull())
     seeds = drop_unsearchable(seeds).filter(F.col("label").isNotNull())
-    seed_rows = seeds.select(
-        F.col("vec_id"), quantize(F.col("embedding")).alias("qv"), "label"
-    ).collect()
-    # seed-modal dims inference + corpus length filter, exactly as in
-    # cosine_topk_bruteforce (same Arrow matmul, same ragged hazard)
-    from collections import Counter
-
-    lens = Counter(len(r["qv"]) for r in seed_rows)
-    dims = max(lens, key=lambda d: (lens[d], -d)) if lens else 0
-    seed_rows = [r for r in seed_rows if len(r["qv"]) == dims]
-    embeddings = embeddings.filter(F.size("embedding") == dims)
-    sid = np.array([r["vec_id"] for r in seed_rows], dtype=np.int64)
-    smat = np.array([r["qv"] for r in seed_rows], dtype=np.int64)
-    slab = np.array([r["label"] for r in seed_rows], dtype=np.int64)
-    order = np.argsort(sid)
-    sid, smat, slab = sid[order], smat[order], slab[order]
-    sn = (smat * smat).sum(axis=1)
-
-    def score_batches(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["vec_id"].to_numpy(np.int64)
-            labs = pdf["label"].to_numpy(np.int64)
-            cmat = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            cn = (cmat * cmat).sum(axis=1)
-            # zero-norm rows score NaN and order differently in numpy's
-            # lexsort vs Spark's window — exclude, as in
-            # cosine_topk_bruteforce
-            nz = cn > 0
-            ids, labs, cmat, cn = ids[nz], labs[nz], cmat[nz], cn[nz]
-            if ids.size == 0:
-                continue
-            ip = cmat @ smat.T
-            score = ip.astype(np.float64) / np.sqrt(
-                (cn[:, None] * sn[None, :]).astype(np.float64)
-            )
-            out = []
-            for j in range(sid.shape[0]):
-                if sn[j] == 0:  # zero-norm seed: no defined negatives
-                    continue
-                mask = (ids != sid[j]) & (labs != slab[j])
-                idj, scj = ids[mask], score[mask, j]
-                if idj.size == 0:
-                    continue
-                top = np.lexsort((idj, -scj))[: min(k, idj.size)]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "seed": sid[j],
-                            "negative": idj[top],
-                            "score": scj[top],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scored = embeddings.select(
-        "vec_id", quantize(F.col("embedding")).alias("qv"), "label"
-    ).mapInPandas(score_batches, "seed long, negative long, score double")
-    w = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("negative"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("seed", "negative", "score", "rk")
+    return _matmul_topk(embeddings, seeds, k, label="label").withColumnRenamed(
+        "neighbor", "negative"
     )
 
 
@@ -1405,6 +1293,70 @@ def semdedup_greedy(
     )
 
 
+def _pq_fixed_topk(
+    embeddings: DataFrame,
+    seeds: DataFrame,
+    k: int,
+    m: int,
+    codes_k: int,
+    dims: int,
+    refine: int,
+    routes: DataFrame | None = None,
+) -> DataFrame:
+    """The exact-integer PQ pipeline behind ``pq_fixed_ann_topk`` and
+    ``ivf_pq_fixed_ann_topk``: fixed codebook, integer-L2 encode, seed
+    LUT, ADC, ``refine·k`` cut, exact re-rank. ``routes`` (vec_id, seed)
+    limits which vectors each seed's ADC scan may score (the IVF probe);
+    without it every seed scans every code."""
+    cb = _subvectors(
+        embeddings.filter(F.col("vec_id") < codes_k), m, dims
+    ).select(
+        "sub_id",
+        F.col("vec_id").cast("int").alias("code"),
+        F.col("sv").alias("cv"),
+    )
+    ldist = (
+        _dot(F.col("sv"), F.col("sv"))
+        - 2 * _dot(F.col("sv"), F.col("cv"))
+        + _dot(F.col("cv"), F.col("cv"))
+    )
+    w_enc = Window.partitionBy("vec_id", "sub_id").orderBy("ldist", "code")
+    enc = (
+        _subvectors(embeddings, m, dims)
+        .join(F.broadcast(cb), "sub_id")
+        .withColumn("ldist", ldist)
+        .withColumn("rk", F.row_number().over(w_enc))
+        .filter(F.col("rk") == 1)
+        .select("vec_id", "sub_id", "code")
+    )
+    lut = (
+        _subvectors(seeds, m, dims)
+        .join(F.broadcast(cb), "sub_id")
+        .select(
+            F.col("vec_id").alias("seed"),
+            "sub_id",
+            "code",
+            ldist.alias("ldist"),
+        )
+    )
+    scan, keys = enc, ["sub_id", "code"]
+    if routes is not None:
+        scan, keys = enc.join(routes, "vec_id"), ["seed", "sub_id", "code"]
+    adc = (
+        scan.join(F.broadcast(lut), keys)
+        .filter(F.col("vec_id") != F.col("seed"))
+        .groupBy("seed", F.col("vec_id").alias("neighbor"))
+        .agg(F.sum("ldist").alias("adc"))
+    )
+    w_cand = Window.partitionBy("seed").orderBy("adc", "neighbor")
+    cand = (
+        adc.withColumn("crk", F.row_number().over(w_cand))
+        .filter(F.col("crk") <= refine * k)
+        .select("seed", "neighbor")
+    )
+    return _rerank(cand, seeds, embeddings, k)
+
+
 def pq_fixed_ann_topk(
     embeddings: DataFrame,
     seeds: DataFrame,
@@ -1438,78 +1390,10 @@ def pq_fixed_ann_topk(
     once for the candidate-only re-rank equi-join. Same memory/IO
     shape as the production LUT scan, rendered relationally.
     """
-    embeddings = drop_unsearchable(embeddings, dims=dims)
-    seeds = drop_unsearchable(seeds, dims=dims)
-    cb = _subvectors(
-        embeddings.filter(F.col("vec_id") < codes_k), m, dims
-    ).select(
-        "sub_id",
-        F.col("vec_id").cast("int").alias("code"),
-        F.col("sv").alias("cv"),
-    )
-
-    def _ldist():
-        return (
-            _dot(F.col("sv"), F.col("sv"))
-            - 2 * _dot(F.col("sv"), F.col("cv"))
-            + _dot(F.col("cv"), F.col("cv"))
-        )
-
-    sub = _subvectors(embeddings, m, dims)
-    w_enc = Window.partitionBy("vec_id", "sub_id").orderBy("ldist", "code")
-    enc = (
-        sub.join(F.broadcast(cb), "sub_id")
-        .withColumn("ldist", _ldist())
-        .withColumn("rk", F.row_number().over(w_enc))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "sub_id", "code")
-    )
-    lut = (
-        _subvectors(seeds, m, dims)
-        .join(F.broadcast(cb), "sub_id")
-        .select(
-            F.col("vec_id").alias("seed"),
-            "sub_id",
-            "code",
-            _ldist().alias("ldist"),
-        )
-    )
-    adc = (
-        enc.join(F.broadcast(lut), ["sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("seed"))
-        .groupBy("seed", F.col("vec_id").alias("neighbor"))
-        .agg(F.sum("ldist").alias("adc"))
-    )
-    w_cand = Window.partitionBy("seed").orderBy("adc", "neighbor")
-    cand = (
-        adc.withColumn("crk", F.row_number().over(w_cand))
-        .filter(F.col("crk") <= refine * k)
-        .select("seed", "neighbor")
-    )
-    q = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"),
-        quantize(F.col("embedding")).alias("cvv"),
-    ).withColumn("cn", _dot(F.col("cvv"), F.col("cvv")))
-    exact = (
-        cand.join(F.broadcast(q), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cvv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
+    return _pq_fixed_topk(
+        drop_unsearchable(embeddings, dims=dims),
+        drop_unsearchable(seeds, dims=dims),
+        k, m, codes_k, dims, refine,
     )
 
 
@@ -1541,7 +1425,9 @@ def ivf_pq_fixed_ann_topk(
     planner-sized); ``refine·k`` candidates per seed by exact-integer
     ADC; exact quantized-cosine re-rank. At 100 TB the codes table is
     partitioned BY CELL, so a probe reads n_probe/K of it — the
-    billion-scale memory/IO shape, here rendered relationally.
+    billion-scale memory/IO shape, here rendered relationally. With
+    every cell probed it returns exactly ``pq_fixed_ann_topk``'s rows:
+    each vector sits in one cell.
     """
     embeddings = drop_unsearchable(embeddings, dims=dims)
     seeds = drop_unsearchable(seeds, dims=dims)
@@ -1549,96 +1435,13 @@ def ivf_pq_fixed_ann_topk(
     vecs = embeddings.select(
         "vec_id", quantize(F.col("embedding")).alias("qv")
     ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    assign = _assign_to_centroids(vecs, cent)
-    svecs = seeds.select(
-        F.col("vec_id").alias("seed"), quantize(F.col("embedding")).alias("qv")
-    ).withColumn("qn", _dot(F.col("qv"), F.col("qv")))
-    pscore = svecs.join(F.broadcast(cent)).select(
-        "seed",
-        "cell_id",
-        (
-            _dot_d(F.col("qv"), F.col("ccv"))
-            / F.sqrt(F.col("qn").cast("double") * F.col("ccn").cast("double"))
-        ).alias("cscore"),
+    routes = (
+        _assign_to_centroids(vecs, cent)
+        .join(F.broadcast(_probe(seeds, cent, n_probe)), "cell_id")
+        .select("vec_id", "seed")
     )
-    w_probe = Window.partitionBy("seed").orderBy(
-        F.desc("cscore"), F.asc("cell_id")
-    )
-    probes = (
-        pscore.withColumn("prk", F.row_number().over(w_probe))
-        .filter(F.col("prk") <= n_probe)
-        .select("seed", "cell_id")
-    )
-
-    cb = _subvectors(
-        embeddings.filter(F.col("vec_id") < codes_k), m, dims
-    ).select(
-        "sub_id",
-        F.col("vec_id").cast("int").alias("code"),
-        F.col("sv").alias("cv"),
-    )
-
-    def _ldist():
-        return (
-            _dot(F.col("sv"), F.col("sv"))
-            - 2 * _dot(F.col("sv"), F.col("cv"))
-            + _dot(F.col("cv"), F.col("cv"))
-        )
-
-    sub = _subvectors(embeddings, m, dims)
-    w_enc = Window.partitionBy("vec_id", "sub_id").orderBy("ldist", "code")
-    enc = (
-        sub.join(F.broadcast(cb), "sub_id")
-        .withColumn("ldist", _ldist())
-        .withColumn("rk", F.row_number().over(w_enc))
-        .filter(F.col("rk") == 1)
-        .select("vec_id", "sub_id", "code")
-    )
-    lut = (
-        _subvectors(seeds, m, dims)
-        .join(F.broadcast(cb), "sub_id")
-        .select(
-            F.col("vec_id").alias("seed"),
-            "sub_id",
-            "code",
-            _ldist().alias("ldist"),
-        )
-    )
-    adc = (
-        enc.join(assign, "vec_id")
-        .join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(lut), ["seed", "sub_id", "code"])
-        .filter(F.col("vec_id") != F.col("seed"))
-        .groupBy("seed", F.col("vec_id").alias("neighbor"))
-        .agg(F.sum("ldist").alias("adc"))
-    )
-    w_cand = Window.partitionBy("seed").orderBy("adc", "neighbor")
-    cand = (
-        adc.withColumn("crk", F.row_number().over(w_cand))
-        .filter(F.col("crk") <= refine * k)
-        .select("seed", "neighbor")
-    )
-    c = embeddings.select(
-        F.col("vec_id").alias("neighbor"),
-        quantize(F.col("embedding")).alias("cvv"),
-    ).withColumn("cn", _dot(F.col("cvv"), F.col("cvv")))
-    exact = (
-        cand.join(F.broadcast(svecs), "seed")
-        .join(c, "neighbor")
-        .select(
-            "seed",
-            "neighbor",
-            (
-                _dot(F.col("qv"), F.col("cvv")).cast("double")
-                / F.sqrt((F.col("qn") * F.col("cn")).cast("double"))
-            ).alias("score"),
-        )
-    )
-    we = Window.partitionBy("seed").orderBy(F.desc("score"), F.asc("neighbor"))
-    return (
-        exact.withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= k)
-        .select("seed", "neighbor", "score", "rk")
+    return _pq_fixed_topk(
+        embeddings, seeds, k, m, codes_k, dims, refine, routes=routes
     )
 
 

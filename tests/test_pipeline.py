@@ -64,7 +64,11 @@ def test_ivf_kmeans_refined_recall_and_full_probe(spark, sf_dir):
     full_probe = sorted(
         (r["seed"], r["rk"], r["neighbor"])
         for r in similarity.ivf_ann_topk(
-            emb, seeds, k=3, n_cells=4, n_probe=4, kmeans_iters=2
+            emb,
+            seeds,
+            k=3,
+            n_probe=4,
+            centroids=similarity.ivf_train_kmeans(emb, 4, iters=2),
         ).collect()
     )
     assert exact == full_probe
@@ -72,7 +76,11 @@ def test_ivf_kmeans_refined_recall_and_full_probe(spark, sf_dir):
     approx = {
         (r["seed"], r["neighbor"])
         for r in similarity.ivf_ann_topk(
-            emb, seeds, k=3, n_cells=8, n_probe=4, kmeans_iters=2
+            emb,
+            seeds,
+            k=3,
+            n_probe=4,
+            centroids=similarity.ivf_train_kmeans(emb, 8, iters=2),
         ).collect()
     }
     exact_pairs = {(s, n) for s, _, n in exact}
@@ -620,6 +628,23 @@ def test_hard_negatives_zero_norm_excluded(spark):
     got = similarity.hard_negatives(emb, seeds, k=4).collect()
     negs = {r["negative"] for r in got}
     assert negs == {2, 4}, negs
+
+
+def test_hard_negatives_with_distinct_labels_equals_bruteforce(spark, sf_dir):
+    """With every label distinct the different-label mask only drops the
+    seed itself, so hard negatives are exactly the brute-force top-k
+    (same scorer, ``neighbor`` renamed ``negative``)."""
+    emb = load_table(spark, sf_dir, "embeddings").withColumn(
+        "label", F.col("vec_id").cast("int")
+    )
+    seeds = emb.filter(F.col("vec_id") < 10)
+    exact = sorted(
+        tuple(r)
+        for r in similarity.cosine_topk_bruteforce(emb, seeds, k=4).collect()
+    )
+    negs = similarity.hard_negatives(emb, seeds, k=4)
+    assert negs.columns == ["seed", "negative", "score", "rk"]
+    assert sorted(tuple(r) for r in negs.collect()) == exact
 
 
 def test_bigram_fluency_hand_corpus(spark):
@@ -1321,6 +1346,26 @@ def test_pq_fixed_recall_vs_bruteforce(spark, sf_dir):
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.3, f"fixed-PQ recall too low: {recall}"
+
+
+def test_pq_fixed_equals_ivf_pq_fixed_with_every_cell_probed(spark, sf_dir):
+    """Every vector sits in exactly one cell, so probing all of them
+    routes every code to every seed: the IVF variant's ADC scan, cut
+    and re-rank then return exactly the plain fixed-PQ rows."""
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
+    seeds = emb.filter(F.col("vec_id") < 10)
+    cfg = dict(k=3, m=8, codes_k=16, refine=4)
+    plain = sorted(
+        tuple(r) for r in similarity.pq_fixed_ann_topk(emb, seeds, **cfg).collect()
+    )
+    routed = sorted(
+        tuple(r)
+        for r in similarity.ivf_pq_fixed_ann_topk(
+            emb, seeds, n_cells=8, n_probe=8, **cfg
+        ).collect()
+    )
+    assert len(plain) == 30
+    assert routed == plain
 
 
 def test_exact_substr_spans_hand_computed(spark):

@@ -43,9 +43,11 @@ Two hashes per query:
 from __future__ import annotations
 
 import argparse
+import functools
 import hashlib
 import inspect
 import json
+import os
 import re
 import sys
 import types
@@ -58,6 +60,23 @@ WINDOW_SIZE = 50  # the driver checks the first 50 entries of queries()
 
 PKG = "neo4j_enterprise_spark"
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _portable(text: str) -> str:
+    """``text`` with the checkout root replaced by a fixed token, so a
+    hash does not depend on where the repository is checked out (the
+    checker-fixture oracles read their parquet files by absolute path)."""
+    return text.replace(_checkout_root(), "<repo>")
+
+
+@functools.cache
+def _checkout_root() -> str:
+    """The root as ``plans/checker.py`` derives its ``FIXTURE_DIR``."""
+    import neo4j_enterprise_spark
+
+    return os.path.abspath(
+        os.path.join(os.path.dirname(neo4j_enterprise_spark.__file__), "..")
+    )
 
 
 def _fn_source(fn) -> str:
@@ -178,7 +197,7 @@ def query_hashes(query) -> dict[str, str]:
     so oracle edits made inline in the decorator are covered twice
     (source text and materialized string) — harmless.
     """
-    oracle = query.oracle if query.oracle is not None else "<rows-only>"
+    oracle = _portable(query.oracle) if query.oracle is not None else "<rows-only>"
 
     h = hashlib.sha256()
     h.update(_fn_source(query.spark).encode("utf-8"))
@@ -192,7 +211,7 @@ def query_hashes(query) -> dict[str, str]:
     for key in sorted(seen):
         hd.update(key.encode("utf-8"))
         hd.update(b"\x00")
-        hd.update(seen[key].encode("utf-8"))
+        hd.update(_portable(seen[key]).encode("utf-8"))
         hd.update(b"\x00")
     hd.update(b"--oracle--\x00")
     hd.update(oracle.encode("utf-8"))
