@@ -1,4 +1,5 @@
-"""Table loaders for the driver testdata.
+"""Table loaders for the driver testdata, and ``local_frame``, through
+which every frame made on the driver from Python rows is created.
 
 The driver generates a TPC-H-ish star schema plus ``events`` (stream),
 ``documents`` and ``embeddings`` (pipeline tables) at
@@ -55,3 +56,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small frame of ``rows`` (tuples in the order of the DDL
+    ``schema``), built on the driver.
+
+    The rows go to Spark as a ``pyarrow.Table``, so below
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) the frame
+    is a JVM-side ``LocalRelation``: Catalyst sees its exact size, and a
+    job that reads it starts no Python worker. ``createDataFrame`` over a
+    Python list instead yields a pickled ``LogicalRDD`` that Catalyst
+    sizes as ``Long.MaxValue`` and that Python workers must decode.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)

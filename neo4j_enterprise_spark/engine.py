@@ -22,13 +22,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import load_table
+from .catalog import load_table, local_frame
 from .graph.derive import derived_nodes, derived_rels
 
 
 class Engine:
     """Session + data directory bound together; every method returns a
-    lazy DataFrame (nothing executes until the caller acts on it)."""
+    DataFrame. Most are lazy: nothing executes until the caller acts on
+    them. ``bfs`` is the exception: it runs one job group per hop at call
+    time, to cut each frontier's lineage, and returns the lazy union."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
@@ -60,7 +62,7 @@ class Engine:
     def bfs(self, seed_ids: list[int], k: int = 2) -> DataFrame:
         from .operators.traversal import bfs_reachable
 
-        seeds = self.spark.createDataFrame([(int(s),) for s in seed_ids], "seed long")
+        seeds = local_frame(self.spark, [(int(s),) for s in seed_ids], "seed long")
         return bfs_reachable(self.rels(), seeds, k=k)
 
     def match(self, pattern: str, attach: dict[str, list[str]] | None = None) -> DataFrame:

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..catalog import local_frame
 from .model import NO_POINTER, PropertyGraph
 
 
@@ -62,11 +63,13 @@ def generate_graph(
 
     # --- dictionaries -------------------------------------------------
     type_names = sorted(rel_specs)
-    rel_types = spark.createDataFrame(
+    rel_types = local_frame(
+        spark,
         [(i, True, n) for i, n in enumerate(type_names)], "id int, in_use boolean, name string"
     )
     key_names = sorted(prop_specs)
-    prop_keys = spark.createDataFrame(
+    prop_keys = local_frame(
+        spark,
         [(i, True, n) for i, n in enumerate(key_names)], "id int, in_use boolean, name string"
     )
 
@@ -79,7 +82,7 @@ def generate_graph(
         for _ in range(rel_specs[t]):
             slots.append((len(slots), t_i))
     R = len(slots)
-    slot_df = spark.createDataFrame(slots, "slot int, type_id int")
+    slot_df = local_frame(spark, slots, "slot int, type_id int")
 
     base = spark.range(node_count).select(F.col("id").alias("src"))
     rels = (
@@ -115,7 +118,7 @@ def generate_graph(
         for _ in range(prop_specs[k]):
             pslots.append((len(pslots), k_i, vtype))
     P = len(pslots)
-    pslot_df = spark.createDataFrame(pslots, "pslot int, key_id int, vtype string")
+    pslot_df = local_frame(spark, pslots, "pslot int, key_id int, vtype string")
 
     props = (
         spark.range(node_count)
@@ -203,7 +206,8 @@ def generate_graph(
                 gp_id + 1 if gp_id + 1 < len(gp_keys) else NO_POINTER,
             )
         )
-    graph_props = spark.createDataFrame(
+    graph_props = local_frame(
+        spark,
         gp_rows,
         "id long, in_use boolean, owner_id long, owner_kind string, seq int, "
         "key_id int, vtype string, value_long long, value_string string, "

@@ -6,10 +6,11 @@ repair tool's fixed-depth chain exploration
 (`RelationshipChainExplorer.java:39-63`).
 
 Design: BFS = iterative frontier equi-joins with a visited-set anti-join.
-Each iteration is one shuffle on the frontier key; ``localCheckpoint()``
-every few rounds cuts lineage so plans don't grow unboundedly (the classic
-iterative-Spark pitfall at scale). Frontiers stay DataFrames end-to-end —
-no driver-side collection of node ids.
+Each iteration is one shuffle on the frontier key; ``bfs_reachable`` cuts
+each round's frontier with an eager ``localCheckpoint()`` so plans don't
+grow unboundedly (the classic iterative-Spark pitfall at scale).
+``CHECKPOINT_EVERY`` paces PageRank alone. Frontiers stay DataFrames
+end-to-end — no driver-side collection of node ids.
 """
 
 from __future__ import annotations

@@ -15,7 +15,7 @@ from ..graph.derive import ORDER_OFF as ORDER_OFF_SQL
 from ..operators import community, reads, traversal, validation
 from ..operators.diff import snapshot_added
 from . import register
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 
 
 @register(
@@ -357,7 +357,8 @@ def record_model_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("in_use", F.col("id") % 997 != 3)
         .withColumn("next_prop", F.lit(NO_POINTER).cast("long"))
     )
-    rel_types = spark.createDataFrame(
+    rel_types = local_frame(
+        spark,
         [(i, True, n) for i, n in enumerate(
             ["PLACED", "CONTAINS", "IN_NATION", "SUPP_NATION", "IN_REGION"], start=1
         )],
@@ -368,7 +369,8 @@ def record_model_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(NO_POINTER).cast("long").alias("next_rel"),
         F.lit(NO_POINTER).cast("long").alias("next_prop"),
     )
-    empty_props = spark.createDataFrame(
+    empty_props = local_frame(
+        spark,
         [],
         "id long, in_use boolean, owner_id long, owner_kind string, prev_prop long, "
         "next_prop long, seq int, key_id int, vtype string, value_long long, "
@@ -551,7 +553,8 @@ def graph_validation_suite_100k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     g = fixture_graph(spark, node_count=100_000)
     v = rc.validate(g)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("ALL", v.count())], "record_type string, n_violations long"
     )
 
@@ -720,7 +723,7 @@ def txlog_replay_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("relationships", out.relationships.count()),
         ("properties", out.properties.count()),
     ]
-    return spark.createDataFrame(counts, "table string, n_rows long")
+    return local_frame(spark, counts, "table string, n_rows long")
 
 
 @register(
@@ -2623,7 +2626,8 @@ def parts_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cypher_merge_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import mutation
 
-    cand = spark.createDataFrame(
+    cand = local_frame(
+        spark,
         [
             ("customer", "Customer#000000007"),
             ("customer", "Customer#000000014"),
@@ -2703,7 +2707,8 @@ def cypher_merge_rels(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(3).alias("type_id"),
         )
     )
-    new = spark.createDataFrame(
+    new = local_frame(
+        spark,
         [(1, 2, "FOLLOWS", 6), (2, 3, "FOLLOWS", 6)],
         "src long, dst long, type_name string, type_id int",
     )
@@ -3546,7 +3551,7 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node_id")
         .agg(F.count("*").alias("deg"))
     )
-    ks = spark.createDataFrame([(5,), (10,), (20,)], "k int")
+    ks = local_frame(spark, [(5,), (10,), (20,)], "k int")
     club = F.broadcast(ks).join(deg, F.col("deg") > F.col("k")).select(
         "k", "node_id"
     )

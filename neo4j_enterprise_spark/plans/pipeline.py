@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..operators import dedup, similarity, text
 from . import register
 
@@ -1528,7 +1528,8 @@ def docs_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     merges, words = bpe_train(docs, n_merges=8)
     words.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string, merged string",
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, local_frame
 from ..operators.rankings import argmax, top_k_per_group
 from . import register
 
@@ -3539,7 +3539,7 @@ def events_hourly_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = grid.join(b, "hr", "left").select(
         "hr", F.coalesce(F.col("c"), F.lit(0)).alias("c")
     )
-    lags = spark.createDataFrame([(1,), (2,), (3,), (24,)], "lag int")
+    lags = local_frame(spark, [(1,), (2,), (3,), (24,)], "lag int")
     x = s.select(F.col("hr"), F.col("c").alias("x"))
     y = s.select(F.col("hr").alias("hr_y"), F.col("c").alias("y"))
     pairs = (

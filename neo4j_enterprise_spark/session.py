@@ -7,7 +7,9 @@ chosen to also be the right call on a large cluster:
   join-strategy switching are exactly what keeps a 100 TB shuffle healthy.
 - ``spark.sql.shuffle.partitions`` defaults to the local core count; on a
   real cluster AQE's coalescing makes the initial number far less critical.
-- Arrow enabled: every Pandas-UDF path in this engine is Arrow-batched.
+- Arrow enabled: every Pandas-UDF path in this engine is Arrow-batched,
+  and driver-built frames go through Arrow too (``catalog.local_frame``),
+  landing in the JVM as ``LocalRelation``s.
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle bit-for-bit.
 """

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from ..catalog import local_frame
 from ..graph.model import NO_POINTER, PropertyGraph
 
 TXLOG_SCHEMA = (
@@ -311,13 +312,15 @@ def base_graph_from_customers(spark: SparkSession, sf_dir: str) -> PropertyGraph
         F.lit(NO_POINTER).cast("long").alias("next_rel"),
         F.col("c_custkey").cast("long").alias("next_prop"),
     )
-    empty_rels = spark.createDataFrame(
+    empty_rels = local_frame(
+        spark,
         [],
         "id long, in_use boolean, src long, dst long, type_id int, "
         "src_prev long, src_next long, dst_prev long, dst_next long, next_prop long",
     )
-    rel_types = spark.createDataFrame([], "id int, in_use boolean, name string")
-    prop_keys = spark.createDataFrame(
+    rel_types = local_frame(spark, [], "id int, in_use boolean, name string")
+    prop_keys = local_frame(
+        spark,
         [(i, True, f"k{i}") for i in range(3)], "id int, in_use boolean, name string"
     )
     return PropertyGraph(

@@ -296,3 +296,65 @@ def test_pagerank_is_personalized_pagerank_seeded_everywhere(spark):
     assert pr.keys() == ppr.keys() == {0, 1, 2, 3}
     for v in pr:
         assert abs(pr[v] - ppr[v]) < 1e-9, (v, pr[v], ppr[v])
+
+
+def _physical_nodes(plan):
+    """Every node of an executed physical plan, through the AQE wrapper
+    and its query stages (cached relations are leaves)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _physical_nodes(plan.executedPlan())
+        return
+    yield plan
+    if name.endswith("QueryStageExec"):
+        yield from _physical_nodes(plan.plan())
+        return
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _physical_nodes(children.apply(i))
+
+
+def test_engine_bfs_broadcasts_its_local_seed_frame(spark, sf_dir, monkeypatch):
+    """``Engine.bfs`` seeds are a ``LocalRelation`` of exact size, so the
+    hop-1 expand join broadcasts the seed side and streams the edge
+    union; the rows equal a plain-Python BFS over the same edges."""
+    from neo4j_enterprise_spark.engine import Engine
+
+    eng = Engine(spark, sf_dir)
+    rels = eng.rels()
+    adj: dict[int, set[int]] = {}
+    for r in rels.select("src", "dst").collect():
+        adj.setdefault(r["src"], set()).add(r["dst"])
+    seed = min(s for s in adj if any(d in adj for d in adj[s]))
+    want, frontier = {seed: 0}, {seed}
+    for depth in (1, 2):
+        frontier = {d for s in frontier for d in adj.get(s, ())} - want.keys()
+        want.update(dict.fromkeys(frontier, depth))
+
+    hops = []
+    frame_cls = type(rels)
+    checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        hops.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    got = eng.bfs([seed], k=2)
+    assert {(r["seed"], r["node_id"], r["hops"]) for r in got.collect()} == {
+        (seed, n, h) for n, h in want.items()
+    }
+
+    assert len(hops) == 2
+    hop1 = list(_physical_nodes(hops[0]._jdf.queryExecution().executedPlan()))
+    expand = [
+        n for n in hop1
+        if n.getClass().getSimpleName() == "BroadcastHashJoinExec"
+        and n.joinType().toString() == "Inner"
+    ]
+    assert len(expand) == 1
+    join = expand[0]
+    assert join.buildSide().toString() == "BuildLeft"
+    build = {n.getClass().getSimpleName() for n in _physical_nodes(join.left())}
+    assert "LocalTableScanExec" in build
+    assert "InMemoryTableScanExec" not in build
