@@ -26,10 +26,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..catalog import local_frame
-from .model import NO_POINTER, PropertyGraph
+from .model import (
+    NO_POINTER,
+    PropertyGraph,
+    link_node_heads,
+    link_property_chains,
+    link_relationship_chains,
+)
 
 
 def _h(seed: int, *cols) -> F.Column:
@@ -97,18 +102,10 @@ def generate_graph(
         )
     )
 
-    # chain pointers: per-endpoint doubly-linked lists in ascending id
-    w_src = Window.partitionBy("src").orderBy("id")
-    # the dst chain must exclude self-loop double-membership; keep it simple:
-    # dst chain over all rels incident as dst, ascending id
-    w_dst = Window.partitionBy("dst").orderBy("id")
-    rels = (
-        rels.withColumn("src_prev", F.coalesce(F.lag("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("src_next", F.coalesce(F.lead("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
-        .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
-        # relationship properties are empty by default (DataGenerator.java:70-72)
-        .withColumn("next_prop", F.lit(NO_POINTER).cast("long"))
+    # chain pointers: per-endpoint doubly-linked lists in ascending id;
+    # relationship properties are empty by default (DataGenerator.java:70-72)
+    rels = link_relationship_chains(rels).withColumn(
+        "next_prop", F.lit(NO_POINTER).cast("long")
     )
 
     # --- properties ---------------------------------------------------
@@ -156,29 +153,13 @@ def generate_graph(
         F.when(F.col("vtype") == "STRING", str_val).alias("value_string"),
         F.when(F.col("vtype") == "ARRAY", arr_val).alias("value_array"),
     )
-    w_owner = Window.partitionBy("owner_kind", "owner_id").orderBy("id")
-    props = props.withColumn(
-        "prev_prop", F.coalesce(F.lag("id").over(w_owner), F.lit(NO_POINTER))
-    ).withColumn("next_prop", F.coalesce(F.lead("id").over(w_owner), F.lit(NO_POINTER)))
+    props = link_property_chains(props)
 
     # --- nodes --------------------------------------------------------
-    first_rel = rels.filter(F.col("src_prev") == NO_POINTER).select(
-        F.col("src").alias("id"), F.col("id").alias("next_rel")
-    )
-    first_prop = props.filter(
-        (F.col("prev_prop") == NO_POINTER) & (F.col("owner_kind") == "node")
-    ).select(F.col("owner_id").alias("id"), F.col("id").alias("next_prop"))
-    nodes = (
-        spark.range(node_count)
-        .select(F.col("id"), F.lit(True).alias("in_use"))
-        .join(first_rel, "id", "left")
-        .join(first_prop, "id", "left")
-        .select(
-            "id",
-            "in_use",
-            F.coalesce("next_rel", F.lit(NO_POINTER)).alias("next_rel"),
-            F.coalesce("next_prop", F.lit(NO_POINTER)).alias("next_prop"),
-        )
+    nodes = link_node_heads(
+        spark.range(node_count).select(F.col("id"), F.lit(True).alias("in_use")),
+        rels,
+        props,
     )
 
     # --- graph-level properties (NeoStore singleton chain) ------------

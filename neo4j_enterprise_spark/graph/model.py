@@ -33,6 +33,8 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 NO_POINTER = -1  # the reference's Record.NO_NEXT_RELATIONSHIP / NO_NEXT_PROPERTY
 
@@ -73,15 +75,37 @@ class PropertyGraph:
         persisting mirrors the reference checker reading materialized
         store files instead of regenerating them. On a cluster, tables
         loaded from parquet snapshots get this for free from scan reuse
-        + the page cache."""
+        + the page cache.
+
+        Relationships and properties are registered before nodes. Spark
+        fixes a cached table's plan when it is registered, substituting
+        only the caches registered before it; a graph whose nodes are
+        derived from its own chains (``link_node_heads``: the generator,
+        ``txlog.replay``) then builds its nodes cache from the other two
+        caches instead of re-deriving the chain windows. Tables that are
+        already cached, such as dictionaries a replay passes through
+        unchanged, are left as they are."""
+        def cached(df: DataFrame | None) -> DataFrame | None:
+            return df if df is None or df.is_cached else df.persist()
+
+        relationships = cached(self.relationships)
+        properties = cached(self.properties)
         return PropertyGraph(
-            nodes=self.nodes.persist(),
-            relationships=self.relationships.persist(),
-            properties=self.properties.persist(),
-            relationship_types=self.relationship_types.persist(),
-            property_keys=self.property_keys.persist(),
-            graph_props=self.graph_props.persist() if self.graph_props is not None else None,
+            nodes=cached(self.nodes),
+            relationships=relationships,
+            properties=properties,
+            relationship_types=cached(self.relationship_types),
+            property_keys=cached(self.property_keys),
+            graph_props=cached(self.graph_props),
         )
+
+    def unpersist(self, keep: "PropertyGraph | None" = None) -> None:
+        """Drop the cache of every table except the ones ``keep`` holds
+        too (a graph derived from this one reads those as they are)."""
+        kept = {id(df) for df in keep.tables().values()} if keep else set()
+        for df in self.tables().values():
+            if id(df) not in kept:
+                df.unpersist()
 
     def save(self, root: str, version: int = 0) -> str:
         """Write a snapshot (S8 full backup: `Master.copyStore`,
@@ -106,3 +130,57 @@ class PropertyGraph:
             property_keys=dfs["property_keys"],
             graph_props=dfs["graph_props"],
         )
+
+
+# Chain pointers are derived, never stored independently: chain order is
+# ascending record id per owner (FIXTURES.md §2), so the generator and
+# tx-log replay link their chains with the same three steps and the
+# validation suite checks the stored pointers against that order.
+
+
+def link_relationship_chains(rels: DataFrame) -> DataFrame:
+    """Set ``src_prev``/``src_next``/``dst_prev``/``dst_next``: the two
+    per-endpoint doubly-linked chains (`RelationshipRecordCheck.java:35-37`)
+    in ascending id, ``NO_POINTER`` at either end. A self-loop sits in
+    both chains of its node."""
+    w_src = Window.partitionBy("src").orderBy("id")
+    w_dst = Window.partitionBy("dst").orderBy("id")
+    return (
+        rels.withColumn("src_prev", F.coalesce(F.lag("id").over(w_src), F.lit(NO_POINTER)))
+        .withColumn("src_next", F.coalesce(F.lead("id").over(w_src), F.lit(NO_POINTER)))
+        .withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
+        .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
+    )
+
+
+def link_property_chains(props: DataFrame) -> DataFrame:
+    """Set ``prev_prop``/``next_prop``: one chain per owner in ascending
+    id (`PropertyRecordCheck.java:35-165`)."""
+    w_owner = Window.partitionBy("owner_kind", "owner_id").orderBy("id")
+    return props.withColumn(
+        "prev_prop", F.coalesce(F.lag("id").over(w_owner), F.lit(NO_POINTER))
+    ).withColumn("next_prop", F.coalesce(F.lead("id").over(w_owner), F.lit(NO_POINTER)))
+
+
+def link_node_heads(nodes: DataFrame, rels: DataFrame, props: DataFrame) -> DataFrame:
+    """``nodes(id, in_use)`` with ``next_rel``/``next_prop`` pointing at
+    the head of the node's source chain and property chain in the linked
+    ``rels`` and ``props`` (``NO_POINTER`` when empty); any pointers
+    ``nodes`` carried are replaced."""
+    first_rel = rels.filter(F.col("src_prev") == NO_POINTER).select(
+        F.col("src").alias("id"), F.col("id").alias("next_rel")
+    )
+    first_prop = props.filter(
+        (F.col("prev_prop") == NO_POINTER) & (F.col("owner_kind") == "node")
+    ).select(F.col("owner_id").alias("id"), F.col("id").alias("next_prop"))
+    return (
+        nodes.select("id", "in_use")
+        .join(first_rel, "id", "left")
+        .join(first_prop, "id", "left")
+        .select(
+            "id",
+            "in_use",
+            F.coalesce("next_rel", F.lit(NO_POINTER)).alias("next_rel"),
+            F.coalesce("next_prop", F.lit(NO_POINTER)).alias("next_prop"),
+        )
+    )

@@ -601,14 +601,26 @@ def validate(g: PropertyGraph) -> DataFrame:
     (`TaskExecutionOrder.java:29-110`, pool = #cores) covering analysis
     as well as execution.
     """
+    return reduce(
+        DataFrame.unionByName,
+        _run_families(g, lambda family: family.localCheckpoint(eager=True)),
+    )
+
+
+def is_consistent(g: PropertyGraph) -> bool:
+    """FullCheck as a verdict: True when no rule family reports a
+    violation (the verified restore's refusal test,
+    `VerificationLevel.VERIFYING`). Same families and pool as
+    ``validate``, but each is only read up to its first row, so nothing
+    is checkpointed and no persisted RDD outlives the call."""
+    return all(_run_families(g, lambda family: family.isEmpty()))
+
+
+def _run_families(g: PropertyGraph, action: Callable[[DataFrame], object]) -> list:
+    """Build every rule family over ``g`` and apply ``action`` to it, each
+    in its own pool thread (see ``validate``)."""
     from concurrent.futures import ThreadPoolExecutor
 
     builders = list(_FAMILY_BUILDERS.values())
     with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        families = list(
-            pool.map(
-                lambda build: build(g).localCheckpoint(eager=True),
-                builders,
-            )
-        )
-    return reduce(DataFrame.unionByName, families)
+        return list(pool.map(lambda build: action(build(g)), builders))

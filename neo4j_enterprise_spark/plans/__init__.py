@@ -67,11 +67,15 @@ def register(
 # Remaining slots go to the queries with the oldest certified evidence.
 # bench.py and the local parity tests are order-independent.
 _DRIVER_PRIORITY: tuple[str, ...] = (
+    # -- one chain-linking helper for the generator and tx-log replay
+    #    (graph.model.link_*); record_model_validation calls it directly
+    "record_model_validation",
+    "txlog_replay_lww",
+    "txlog_as_of_read",
+    "txlog_replay_roundtrip",
+    "graph_validation_suite_100k",
     # -- driver-side frames built as Arrow LocalRelations (catalog.local_frame)
     "docs_bpe_merges",
-    "record_model_validation",
-    "graph_validation_suite_100k",
-    "txlog_replay_roundtrip",
     "cypher_merge_nodes",
     "cypher_merge_rels",
     "graph_rich_club",
@@ -87,8 +91,6 @@ _DRIVER_PRIORITY: tuple[str, ...] = (
     "cypher_shortest_path",
     "graph_label_propagation_derived",
     "graph_betweenness_exact_small",
-    "txlog_replay_lww",
-    "txlog_as_of_read",
     # -- b1 record-check fusion (OPTIMIZATION_r13.md §1); with the path-
     #    independent manifest every check_fixture oracle hash moved
     "check_fixture_nodes",
@@ -179,7 +181,10 @@ _DEEP_CHANGE_ACK: dict[str, str] = {
         "record_model_validation lead this window. validate() builds "
         "each family inside its pool thread (OPTIMIZATION_r13.md §11); "
         "its lazy single-plan branch, which no caller used, is gone, and "
-        "the thread-pool path every caller ran is unchanged"
+        "the thread-pool path every caller ran is unchanged (it now lives "
+        "in _run_families, shared with is_consistent). The generator links "
+        "its chains with graph.model.link_*: optimized plans and "
+        "fixture_graph rows equal the parent commit's"
     ),
     "graph_full_validation": (
         "rows-only query (no oracle); runs rc.validate() on a corrupted "
@@ -191,7 +196,11 @@ _DEEP_CHANGE_ACK: dict[str, str] = {
         "graph properties with catalog.local_frame (Arrow LocalRelations "
         "of the same rows and schemas); evidence: generate_graph and "
         "fixture_graph tables hash-equal to the parent commit, and "
-        "tests/test_local_frame.py"
+        "tests/test_local_frame.py. Its chain windows and node-head "
+        "joins now come from graph.model.link_*, and validate() runs its "
+        "families through _run_families: generate_graph's optimized "
+        "plans equal the parent's apart from expression ids, and this "
+        "query's rows hash-equal to the parent commit's"
     ),
     "ann_lsh_top5": _ANN_STAGES_ACK + (
         "; its optimized plan is identical to the parent's apart from "
@@ -223,13 +232,6 @@ _DEEP_CHANGE_ACK: dict[str, str] = {
         "n_seeds every iteration — the same formula, factored. Evidence: "
         "the unchanged mass/concentration test and the new "
         "pagerank-equals-all-seeds personalized test (1e-9)"
-    ),
-    "txlog_replay_roundtrip": (
-        "rows-only query (no oracle); replay now drops every base row of "
-        "a key that has any remove_prop in range (the remove-then-set "
-        "fix). synthesize_txlog emits no remove_prop ops, so this "
-        "query's rows are unchanged; the oracle-bearing replay queries "
-        "txlog_replay_lww and txlog_as_of_read lead this window"
     ),
     **{
         name: (

@@ -341,19 +341,11 @@ def graph_full_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exactly; back-reference/other-node rules fire on neither side.",
 )
 def record_model_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from ..graph.model import NO_POINTER, PropertyGraph
+    from ..graph.model import NO_POINTER, PropertyGraph, link_relationship_chains
     from ..operators import record_checks as rc
 
-    rels = derived_rels(spark, sf_dir)
-    w_src = Window.partitionBy("src").orderBy("id")
-    w_dst = Window.partitionBy("dst").orderBy("id")
     rels_rm = (
-        rels.withColumn("src_prev", F.coalesce(F.lag("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("src_next", F.coalesce(F.lead("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
-        .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
+        link_relationship_chains(derived_rels(spark, sf_dir))
         .withColumn("in_use", F.col("id") % 997 != 3)
         .withColumn("next_prop", F.lit(NO_POINTER).cast("long"))
     )

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..graph.model import PropertyGraph
-from ..operators.record_checks import validate
-from .txlog import export_range, replay, verify_checksums
+from ..operators.record_checks import is_consistent
+from .txlog import TXLOG_SCHEMA, export_range, replay, verify_checksums
 
 _META = "backup_meta.json"
 
@@ -51,7 +51,10 @@ def incremental_backup(
     slice_ = export_range(txlog, start, up_to_tx)
     slice_.write.mode("overwrite").parquet(os.path.join(backup_dir, f"txlog_{start}_{up_to_tx}"))
     with open(os.path.join(backup_dir, _META), "w") as f:
-        json.dump({"last_tx": up_to_tx, "base_version": meta["last_tx"]}, f)
+        # the base snapshot stays the full backup's, however many
+        # incrementals follow it
+        base_version = meta.get("base_version", meta["last_tx"])
+        json.dump({"last_tx": up_to_tx, "base_version": base_version}, f)
     return slice_
 
 
@@ -135,7 +138,20 @@ def restore(
 ) -> PropertyGraph:
     """S10 + R6: load the base snapshot, replay every exported incremental
     in tx order, optionally run the full consistency check and refuse a
-    corrupt restore (`VerificationLevel.VERIFYING`)."""
+    corrupt restore (`VerificationLevel.VERIFYING`).
+
+    With ``verify``, each replayed slice is persisted and materialized
+    before anything reads it (``PropertyGraph.persist``), as the
+    reference checks a store that `RebuildFromLogs` has already written:
+    the next slice and the checker's rule families then read it from
+    memory instead of each re-deriving the replay lineage. A slice's
+    cache is dropped once the next slice has been materialized. When the
+    backup holds incrementals, the returned graph's tables stay cached
+    and belong to the caller, who releases them with
+    ``PropertyGraph.unpersist``. A restore that fails leaves nothing
+    cached. Without ``verify`` nothing is cached and the result is a lazy
+    lineage over the backup's files.
+    """
     with open(os.path.join(backup_dir, _META)) as f:
         meta = json.load(f)
     base_version = meta.get("base_version", meta["last_tx"])
@@ -144,11 +160,23 @@ def restore(
         (d for d in os.listdir(backup_dir) if d.startswith("txlog_")),
         key=lambda d: int(d.split("_")[1]),
     )
-    for d in slices:
-        log = spark.read.parquet(os.path.join(backup_dir, d))
-        g = replay(g, log)
-    if verify:
-        n_bad = validate(g).limit(1).count()
-        if n_bad:
+    cached: list[PropertyGraph] = []  # the slices this call holds in memory
+    try:
+        for d in slices:
+            log = spark.read.schema(TXLOG_SCHEMA).parquet(os.path.join(backup_dir, d))
+            g = replay(g, log)
+            if verify:
+                g = g.persist()
+                cached.append(g)
+                # the nodes cache reads the relationships and properties
+                # caches, so counting the nodes builds all three
+                g.nodes.count()
+                if len(cached) > 1:
+                    cached.pop(0).unpersist(keep=g)
+        if verify and not is_consistent(g):
             raise ValueError("restored graph failed consistency check")
+    except BaseException:
+        for c in cached:
+            c.unpersist()
+        raise
     return g

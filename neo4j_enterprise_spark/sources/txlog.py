@@ -33,7 +33,13 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from ..catalog import local_frame
-from ..graph.model import NO_POINTER, PropertyGraph
+from ..graph.model import (
+    NO_POINTER,
+    PropertyGraph,
+    link_node_heads,
+    link_property_chains,
+    link_relationship_chains,
+)
 
 TXLOG_SCHEMA = (
     "tx_id long, master_id int, checksum long, op string, "
@@ -128,14 +134,7 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
     # recompute chain pointers over the merged relationship set — the
     # derived-chain invariant (ascending id per endpoint) is restored
     # after every replay, mirroring the kernel relinking chains on write
-    w_src = Window.partitionBy("src").orderBy("id")
-    w_dst = Window.partitionBy("dst").orderBy("id")
-    rels = (
-        rels.withColumn("src_prev", F.coalesce(F.lag("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("src_next", F.coalesce(F.lead("id").over(w_src), F.lit(NO_POINTER)))
-        .withColumn("dst_prev", F.coalesce(F.lag("id").over(w_dst), F.lit(NO_POINTER)))
-        .withColumn("dst_next", F.coalesce(F.lead("id").over(w_dst), F.lit(NO_POINTER)))
-    )
+    rels = link_relationship_chains(rels)
 
     # property ops: a remove anywhere in the range drops every base row
     # of its (owner, key) — the key may hold several — and a set that is
@@ -208,36 +207,13 @@ def replay(base: PropertyGraph, txlog: DataFrame, up_to_tx: int | None = None) -
             F.lit(None).cast("array<int>").alias("value_array"),
         )
     )
-    all_props = updated.unionByName(inserts)
-    w_owner = Window.partitionBy("owner_kind", "owner_id").orderBy("id")
-    all_props = (
-        all_props.withColumn(
-            "prev_prop", F.coalesce(F.lag("id").over(w_owner), F.lit(NO_POINTER))
-        )
-        .withColumn("next_prop", F.coalesce(F.lead("id").over(w_owner), F.lit(NO_POINTER)))
-        .select(
-            "id", "in_use", "owner_id", "owner_kind", "prev_prop", "next_prop",
-            "seq", "key_id", "vtype", "value_long", "value_string", "value_array",
-        )
+    all_props = link_property_chains(updated.unionByName(inserts)).select(
+        "id", "in_use", "owner_id", "owner_kind", "prev_prop", "next_prop",
+        "seq", "key_id", "vtype", "value_long", "value_string", "value_array",
     )
 
     # refresh node first-pointers from the rebuilt chains
-    first_rel = rels.filter(F.col("src_prev") == NO_POINTER).select(
-        F.col("src").alias("id"), F.col("id").alias("new_next_rel")
-    )
-    first_prop = all_props.filter(
-        (F.col("prev_prop") == NO_POINTER) & (F.col("owner_kind") == "node")
-    ).select(F.col("owner_id").alias("id"), F.col("id").alias("new_next_prop"))
-    nodes = (
-        nodes.join(first_rel, "id", "left")
-        .join(first_prop, "id", "left")
-        .select(
-            "id",
-            "in_use",
-            F.coalesce("new_next_rel", F.lit(NO_POINTER)).alias("next_rel"),
-            F.coalesce("new_next_prop", F.lit(NO_POINTER)).alias("next_prop"),
-        )
-    )
+    nodes = link_node_heads(nodes, rels, all_props)
 
     return PropertyGraph(
         nodes=nodes,

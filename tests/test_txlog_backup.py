@@ -119,6 +119,144 @@ def test_incremental_backup_restore(spark, tmp_path):
     assert a == b
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _consistent_log(spark):
+    """Thirty txs over ``generate_graph(node_count=100)`` that keep the
+    store consistent: node and relationship creates, a self-loop, updates
+    of keys a node holds twice, property inserts, a remove, a relationship
+    delete and a node created then deleted. Inserts land in (owner, key)
+    order, so property ids do not depend on where the log is cut."""
+    from neo4j_enterprise_spark.functions.hashing import checksum_column
+
+    def rel(src, dst, type_id):
+        return json.dumps({"src": src, "dst": dst, "type_id": type_id})
+
+    def prop(key_id, value=None):
+        return json.dumps({"key_id": key_id, "value_long": value})
+
+    ops = {
+        0: ("create_node", "node", 100, "{}"),
+        1: ("create_node", "node", 101, "{}"),
+        2: ("set_prop", "node", 100, prop(1, 7)),
+        3: ("create_rel", "rel", 1000, rel(100, 3, 0)),
+        4: ("set_prop", "node", 1, prop(1, 9)),
+        5: ("create_rel", "rel", 1001, rel(4, 100, 1)),
+        15: ("delete_rel", "rel", 5, "{}"),
+        16: ("create_node", "node", 102, "{}"),
+        17: ("set_prop", "node", 102, prop(0, 3)),
+        18: ("remove_prop", "node", 2, prop(2)),
+        19: ("create_rel", "rel", 1002, rel(101, 101, 0)),
+        20: ("create_node", "node", 103, "{}"),
+        21: ("delete_node", "node", 103, "{}"),
+        22: ("set_prop", "node", 100, prop(1, 8)),
+        29: ("set_prop", "node", 50, prop(2, 4)),
+    }
+    rows = [(tx, 0, 0, *op) for tx, op in sorted(ops.items())]
+    return spark.createDataFrame(rows, TXLOG_SCHEMA).withColumn(
+        "checksum",
+        checksum_column(
+            F.col("tx_id"), F.col("op"), F.col("entity_kind"), F.col("entity_id"), F.col("payload")
+        ),
+    )
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
+def test_verified_restore_of_two_incrementals_equals_one_replay(spark, tmp_path):
+    g = generate_graph(spark, node_count=100)
+    log = _consistent_log(spark)
+    d = str(tmp_path / "bk_two")
+    bk.full_backup(g, d, last_tx=-1)
+    bk.incremental_backup(d, log, up_to_tx=14)
+    bk.incremental_backup(d, log, up_to_tx=29)
+    with open(os.path.join(d, "backup_meta.json")) as f:
+        assert json.load(f) == {"last_tx": 29, "base_version": -1}
+
+    before = _persisted_rdd_ids(spark)
+    restored = bk.restore(spark, d, verify=True)
+    # the first slice's cache is gone; the returned graph's tables stay
+    # cached, and the check left no checkpoint behind
+    assert all(df.is_cached for df in restored.tables().values())
+    assert len(_persisted_rdd_ids(spark) - before) == len(restored.tables())
+
+    expected = replay(g, log)
+    for name in ("nodes", "relationships", "properties"):
+        assert _rows(getattr(restored, name)) == _rows(getattr(expected, name)), name
+
+    restored.unpersist()
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
+def test_failed_verified_restore_leaves_no_cache(spark, tmp_path):
+    g = generate_graph(spark, node_count=100)
+    d = str(tmp_path / "bk_bad")
+    bk.full_backup(g, d, last_tx=-1)
+    # synthesize_txlog deletes nodes that still have relationships
+    bk.incremental_backup(d, synthesize_txlog(spark, n_txs=30, base_nodes=100), up_to_tx=29)
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(ValueError, match="consistency check"):
+        bk.restore(spark, d, verify=True)
+    assert _persisted_rdd_ids(spark) - before == set()
+
+
+def _plan_operators(plan):
+    """Operators of a physical plan, through adaptive plans and query
+    stages but not into the caches its ``InMemoryTableScan``s read."""
+    name = plan.nodeName()
+    yield plan
+    if name == "InMemoryTableScan":
+        return
+    if name == "AdaptiveSparkPlan":
+        children = [plan.executedPlan()]
+    elif name.endswith("QueryStage"):
+        children = [plan.plan()]
+    else:
+        seq = plan.children()
+        children = [seq.apply(i) for i in range(seq.size())]
+    for child in children:
+        yield from _plan_operators(child)
+
+
+def test_restored_nodes_cache_reads_relationship_and_property_caches(spark, tmp_path):
+    import re
+
+    g = generate_graph(spark, node_count=100)
+    d = str(tmp_path / "bk_plan")
+    bk.full_backup(g, d, last_tx=-1)
+    bk.incremental_backup(d, _consistent_log(spark), up_to_tx=29)
+    restored = bk.restore(spark, d, verify=True)
+    try:
+        identity = spark._jvm.System.identityHashCode
+
+        def cache_of(df):
+            relation = df._jdf.queryExecution().optimizedPlan()
+            assert relation.nodeName() == "InMemoryRelation"
+            return relation
+
+        ops = list(_plan_operators(cache_of(restored.nodes).cachedPlan()))
+        scanned = {
+            identity(op.relation().cacheBuilder())
+            for op in ops
+            if op.nodeName() == "InMemoryTableScan"
+        }
+        for table in (restored.relationships, restored.properties):
+            assert identity(cache_of(table).cacheBuilder()) in scanned
+        chain_windows = [
+            str(op.partitionSpec())
+            for op in ops
+            if op.nodeName() == "Window"
+            and re.search(r"\b(src|dst|owner_id)#", str(op.partitionSpec()))
+        ]
+        assert chain_windows == []
+    finally:
+        restored.unpersist()
+
+
 def test_write_graph_tables_roundtrip(spark, sf_dir, tmp_path):
     from neo4j_enterprise_spark.graph.derive import (
         derived_nodes,
